@@ -1,6 +1,6 @@
 """Link-graph benchmark: one workload, one seed, one closed-loop client.
 
-    python3 perfbench/run.py --workload rmat_skewed --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload rmat_skewed --seed 1 --seconds 20 --trace 0
 
 Prints human-readable lines, then as its last line one JSON object with
 ``correct``, ``attempted``, ``failed`` and ``metrics``. ``--trace 0`` reports
@@ -85,12 +85,17 @@ class Bench:
         self.ref = reference.load(path)
 
     # -- set-up: session, scan, build, warm-up ---------------------------------
-    def restart(self, event_log: bool = False) -> None:
+    def stop(self) -> None:
+        """Stops the session (which completes its event log); the JVM stays."""
         if self.built is not None:
             self.built.graph.unpersist()
             self.built = None
         if self.spark is not None:
             self.spark.stop()
+            self.spark = None
+
+    def restart(self, event_log: bool = False) -> None:
+        self.stop()
         self.spark = start_session(self.work, event_log=event_log)
         self.tracer = tracing.Tracer(self.spark) if event_log else None
 
@@ -228,22 +233,20 @@ class Bench:
     def cycle(self) -> dict:
         return {p: self.call(p) for p in PHASES}
 
-    def warm_up(self) -> float:
-        """Every kernel once on the real graph, iterative ones capped at two
-        supersteps. A pass over a tiny graph (other plans) left the first
-        real calls up to twice as slow; a full cycle cost as much as the
-        timed one."""
+    def warm_up(self, ingested: bool) -> tuple[float, list]:
+        """One checked call of every phase (of every phase but ingest when
+        ``ingested`` says set-up already ran it) before timing. After capped
+        calls the first timed calls ran up to a third slower, after a pass
+        over a tiny graph up to twice as slow, by amounts that varied from
+        run to run. Returns (seconds, checked calls)."""
         t0 = time.perf_counter()
-        g = self.built.graph
-        with self.phase("setup"):
-            pagerank(self.spark, g, tol=0.0, max_iter=2).toPandas()
-            cc_minlabel(self.spark, g, max_iter=2).toPandas()
-            label_propagation(self.spark, g, num_iters=1).toPandas()
-            triangle_count(g)
-        return time.perf_counter() - t0
+        checked = [self.call(p) for p in PHASES if p != "ingest" or not ingested]
+        return time.perf_counter() - t0, checked
 
     def closed_loop(self, seconds: float) -> dict:
-        """Whole cycles over PHASES until ``seconds`` have elapsed."""
+        """Whole cycles over PHASES until ``seconds`` have elapsed. A cycle
+        is never cut short, and every phase gets the same number of calls,
+        so a slow run does not skip the calls that a fast run makes."""
         samples = {p: [] for p in PHASES}
         t_end = time.perf_counter() + seconds
         while True:
@@ -276,6 +279,21 @@ class Bench:
             "operators.spmv_s": spmv_s,
             "operators.spmv_mteps": self.built.nnz / spmv_s / 1e6,
         }
+
+
+def traced_pass(bench: Bench):
+    """A fresh session with an event log: one load and one cycle with every
+    phase under a job group and every runner call in a span, then the
+    layout and spmv probes. Stopping the session completes the log."""
+    t0 = time.perf_counter()
+    bench.restart(event_log=True)
+    bench.traced_setup_s = time.perf_counter() - t0 + bench.load(restart=False)
+    bench.prepare_resume()
+    traced = bench.cycle()
+    spans, ingest = bench.tracer.spans, bench.last_ingest
+    probe = bench.probes()
+    bench.stop()
+    return traced, spans, ingest, probe
 
 
 def median_ok(samples: list) -> float:
@@ -316,7 +334,6 @@ def per_layer(bench: Bench, spans: list, traced: dict, ingest: dict, probe: dict
     m = {}
     for k in ("build_graph_s", "build_vertices_s", "build_edges_s"):
         m[f"sources.{k}"] = ingest.get(k, 0.0)
-    m["sources.edges"] = bench.built.nnz
     m.update(probe)
 
     # superstep layer
@@ -363,10 +380,12 @@ def per_layer(bench: Bench, spans: list, traced: dict, ingest: dict, probe: dict
         r = tracing.rollup([st for st in stages if tracing.phase_of(st.group) == phase])
         wall = walls[phase]
         for k in ("stages", "tasks", "executor_run_s", "executor_cpu_s", "gc_s",
-                  "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", "task_skew"):
+                  "shuffle_write_bytes", "task_skew"):
             m[f"{phase}.{k}"] = r[k]
         m[f"{phase}.utilization"] = r["executor_run_s"] / (wall * cores)
         m[f"{phase}.wall_s"] = wall
+    m["jvm.peak_heap_mb"] = tracing.rollup(
+        [st for st in stages if tracing.phase_of(st.group) in PHASES])["peak_heap_mb"]
     # over the timed phases: set-up differs (the traced one restarts a warm JVM)
     traced_total = sum(traced[p] for p in PHASES)
     untraced_total = sum(untraced[p] for p in PHASES)
@@ -391,38 +410,35 @@ def main(argv=None) -> int:
             t0 = time.perf_counter()
             bench.restart()  # starts the JVM
             launch_s = time.perf_counter() - t0
-            bench.wl.derive(bench.spark, bench.data)
-            # a traced run reports no end-to-end metrics: one load and one
-            # untraced cycle are enough to bracket its traced cycle
+            ingested = bench.wl.derive(bench.spark, bench.data)
+            # a traced run reports no end-to-end metrics: one load, and an
+            # untraced cycle on each side of the traced one, are enough
             loads = [bench.load() for _ in range(1 if args.trace else SETUP_REPS)]
             bench.prepare_reference()
             bench.prepare_resume()
-            warm_s = bench.warm_up()
+            warm_s, warm_checked = bench.warm_up(ingested)
             samples = bench.closed_loop(0 if args.trace else args.seconds)
+            if args.trace:
+                traced, spans, ingest, probe = traced_pass(bench)
+                # the mean of the cycles before and after is the untraced
+                # time, so JIT warm-up in between does not read as overhead
+                bench.load()
+                bench.prepare_resume()
+                for p, sample in bench.cycle().items():
+                    samples[p].append(sample)
         setup_s = launch_s + statistics.median(loads) + warm_s
         print(f"# setup: launch {launch_s:.3f} s, loads "
               + " ".join(f"{t:.3f}" for t in loads) + f" s, warm-up {warm_s:.3f} s")
         for p, v in samples.items():
             print(f"# {p} calls: " + " ".join(f"{w:.3f}{'' if ok else '!'}" for w, ok in v) + " s")
         metrics = end_to_end(bench, setup_s, samples, rss.peak_mb)
-        checked = [x for v in samples.values() for x in v]
+        checked = warm_checked + [x for v in samples.values() for x in v]
         attempted = len(checked)
         failed = sum(not ok for _, ok in checked)
         if args.trace:
-            t0 = time.perf_counter()
-            bench.restart(event_log=True)
-            bench.traced_setup_s = time.perf_counter() - t0 + bench.load(restart=False)
-            bench.prepare_resume()
-            traced = bench.cycle()
-            spans, ingest = bench.tracer.spans, bench.last_ingest
-            probe = bench.probes()
-            bench.spark.stop()  # completes the event log
-            bench.spark = None
             attempted += len(traced)
             failed += sum(not ok for _, ok in traced.values())
-            # The untraced cycle ran first, with a colder JIT: the overhead
-            # reads low by however much the JIT warmed in between.
-            untraced = {p: samples[p][-1][0] for p in PHASES}
+            untraced = {p: statistics.mean(w for w, _ in samples[p]) for p in PHASES}
             metrics, wrong = per_layer(
                 bench, spans, {p: w for p, (w, _) in traced.items()}, ingest, probe,
                 untraced, os.path.join(work.tmp, "eventlog"),

@@ -69,9 +69,9 @@ def start_session(work: WorkDirs, event_log: bool = False) -> SparkSession:
     os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     cores = host_cores()
     heap = driver_heap_mb()
-    # A fixed, pre-touched heap: peak RSS then does not depend on when G1
-    # decides to grow the heap, so it moves only with memory outside it.
-    jvm_opts = f"-Xms{heap}m -XX:+AlwaysPreTouch -XX:-UsePerfData -Djava.io.tmpdir={tmp}"
+    # the heap starts small and grows with what the engine allocates, so
+    # peak memory follows the engine rather than a fixed reservation
+    jvm_opts = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName("perfbench")
@@ -81,14 +81,6 @@ def start_session(work: WorkDirs, event_log: bool = False) -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(2 * cores))
         .config("spark.default.parallelism", str(2 * cores))
         .config("spark.sql.adaptive.enabled", "true")
-        # Scale model: the benchmark's graphs are a few MB, which AQE would
-        # coalesce into one partition (one task per stage). Partition sizes
-        # scaled down with the input keep several partitions per layout,
-        # so hash layouts, skew and task parallelism are exercised.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-        .config("spark.sql.files.maxPartitionBytes", "256k")
-        .config("spark.sql.files.openCostInBytes", "16k")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -99,6 +91,10 @@ def start_session(work: WorkDirs, event_log: bool = False) -> SparkSession:
         b = (
             b.config("spark.eventLog.dir", "file://" + work.sub("eventlog"))
             .config("spark.eventLog.compress", "false")
+            # per-stage peak JVM memory, for the traced run's heap metric;
+            # it is sampled at heartbeats, 10 s apart by default
+            .config("spark.eventLog.logStageExecutorMetrics", "true")
+            .config("spark.executor.heartbeatInterval", "1s")
         )
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -183,8 +179,9 @@ def wait_for_descendants(timeout: float = 60.0) -> bool:
 
 
 class PeakRss:
-    """Samples the memory of this process and its descendants (the JVM and
-    its Python workers), summed as PSS, every ``interval`` seconds."""
+    """Samples the memory of this process's descendants (the JVM and its
+    Python workers), summed as PSS, every ``interval`` seconds. This
+    process is left out: it also holds the numpy/DuckDB reference answers."""
 
     def __init__(self, interval: float = 0.25):
         self.interval = interval
@@ -194,7 +191,7 @@ class PeakRss:
 
     def _sample(self) -> None:
         me = os.getpid()
-        total = _pss_kb(me) + sum(_pss_kb(p) for p in descendants(me))
+        total = sum(_pss_kb(p) for p in descendants(me))
         self.peak_kb = max(self.peak_kb, total)
 
     def _run(self) -> None:

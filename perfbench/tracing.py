@@ -157,10 +157,9 @@ _TASK_SUMS = {
     "executor_run_s": (1e-3, [("Executor Run Time",)]),
     "executor_cpu_s": (1e-9, [("Executor CPU Time",)]),
     "gc_s": (1e-3, [("JVM GC Time",)]),
-    "shuffle_read_bytes": (1, [("Shuffle Read Metrics", "Remote Bytes Read"),
-                               ("Shuffle Read Metrics", "Local Bytes Read")]),
+    # one local executor reads back exactly what it wrote, so the written
+    # bytes stand for both sides of the shuffle
     "shuffle_write_bytes": (1, [("Shuffle Write Metrics", "Shuffle Bytes Written")]),
-    "spill_bytes": (1, [("Memory Bytes Spilled",), ("Disk Bytes Spilled",)]),
 }
 
 
@@ -181,6 +180,7 @@ class Stage:
     completed: int = 0
     task_ms: list = field(default_factory=list)
     sums: dict = field(default_factory=dict)
+    peak_heap: int = 0  # bytes of JVM heap in use, peak while the stage ran
 
 
 def _event_files(log_dir: str) -> list[list[str]]:
@@ -224,6 +224,11 @@ def read_stages(log_dir: str) -> list[Stage]:
                         tm = ev.get("Task Metrics") or {}
                         for k, (scale, paths) in _TASK_SUMS.items():
                             st.sums[k] += _metric(tm, scale, paths)
+                    elif kind == "SparkListenerStageExecutorMetrics":
+                        st = live.get((ev["Stage ID"], ev["Stage Attempt ID"]))
+                        if st is not None:
+                            heap = (ev.get("Executor Metrics") or {}).get("JVMHeapMemory", 0)
+                            st.peak_heap = max(st.peak_heap, heap)
                     elif kind == "SparkListenerStageCompleted":
                         info = ev["Stage Info"]
                         st = live.get((info["Stage ID"], info["Stage Attempt ID"]))
@@ -240,6 +245,7 @@ def rollup(stages: list[Stage]) -> dict:
     out = {"stages": len(stages), "tasks": sum(len(s.task_ms) for s in stages)}
     for k in _TASK_SUMS:
         out[k] = sum(s.sums[k] for s in stages)
+    out["peak_heap_mb"] = max((s.peak_heap for s in stages), default=0) / 2**20
     longest = max(stages, key=lambda s: s.completed - s.submitted, default=None)
     if longest is not None and longest.task_ms:
         med = statistics.median(longest.task_ms)
