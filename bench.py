@@ -250,24 +250,8 @@ HEADLINE = [
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("combblas-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(32, int(cpus))))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "20g")
-        # Lazy heap growth causes random multi-10s page-fault stalls
-        # mid-query on this VM (see CLAUDE.md / scripts/bench_scaling.py);
-        # pre-touch the whole heap up front so timings measure the plan,
-        # not the allocator.
-        .config("spark.driver.extraJavaOptions", "-Xms20g -XX:+AlwaysPreTouch")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    spark = make_session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()
@@ -316,6 +300,24 @@ def main():
         )
     )
     spark.stop()
+
+
+def make_session(cpus: str) -> SparkSession:
+    # driver heap: half of physical memory (MemTotal), capped at 20g, so the
+    # JVM also starts on small hosts
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("combblas-spark-bench")
+        .config("spark.sql.shuffle.partitions", str(max(32, int(cpus))))
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.driver.memory", f"{min(20 * 1024, mem_mb // 2)}m")
+        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
+    )
 
 
 if __name__ == "__main__":

@@ -1,5 +1,5 @@
 """Targeted bench harness for optimization work (bench.py is FROZEN for
-measurement; this file mirrors its session config + methodology so subset
+measurement; this file reuses its session builder + methodology so subset
 numbers are comparable, and adds explain-plan capture per guide §1).
 
 Usage:
@@ -19,28 +19,10 @@ import os
 import sys
 import time
 
-from pyspark.sql import SparkSession
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
-
-
-def make_session(cpus: str) -> SparkSession:
-    # identical to bench.py so numbers are comparable
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("combblas-spark-bench-extra")
-        .config("spark.sql.shuffle.partitions", str(max(32, int(cpus))))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "20g")
-        .config("spark.driver.extraJavaOptions", "-Xms20g -XX:+AlwaysPreTouch")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+from bench import make_session  # noqa: E402
 
 
 def main():
@@ -52,7 +34,7 @@ def main():
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = make_session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()

@@ -16,7 +16,7 @@ from combblas_spark.algorithms.butterflies import butterfly_count  # noqa: F401
 from combblas_spark.algorithms.coarsen import coarsen, heavy_edge_matching  # noqa: F401
 from combblas_spark.algorithms.salsa import salsa  # noqa: F401
 from combblas_spark.algorithms.backbone import disparity_backbone  # noqa: F401
-from combblas_spark.algorithms.wl import wl_refine, wl_color_histogram  # noqa: F401
+from combblas_spark.algorithms.wl import wl_refine  # noqa: F401
 from combblas_spark.algorithms.localcluster import sweep_cut  # noqa: F401
 from combblas_spark.algorithms.labelprop import label_propagation, mcl  # noqa: F401
 from combblas_spark.algorithms.sssp import sssp  # noqa: F401
@@ -26,7 +26,6 @@ from combblas_spark.algorithms.matching import (  # noqa: F401
     maximal_matching,
     maximum_matching,
     approx_weight_matching,
-    auction_matching,
 )
 from combblas_spark.algorithms.filtered import filtered_bfs  # noqa: F401
 from combblas_spark.algorithms.kcore import kcore  # noqa: F401

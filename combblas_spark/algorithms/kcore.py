@@ -113,6 +113,9 @@ def coreness_profile(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    if not ks:
+        raise ValueError("coreness_profile: ks must be non-empty")
+
     def one_k(k: int) -> DataFrame:
         return kcore(spark, edges, k=k, max_rounds=max_rounds).select(
             "id", (F.col("in_kcore") * F.lit(k)).cast("long").alias("kb")
@@ -121,7 +124,7 @@ def coreness_profile(
     # the |ks| peels are independent monotone filters — overlap them so
     # each peel's stage tail back-fills with the next peel's tasks (the
     # same concurrent-jobs shape as stats.attack_profile)
-    with ThreadPoolExecutor(max_workers=len(ks)) as pool:
+    with ThreadPoolExecutor(max_workers=min(len(ks), 3)) as pool:
         parts = list(pool.map(one_k, sorted(ks)))
     out = parts[0]
     for m in parts[1:]:

@@ -246,96 +246,6 @@ def maximum_matching(
         e.unpersist()
 
 
-def auction_matching(
-    spark: SparkSession,
-    edges: DataFrame,
-    eps: float = 0.01,
-    max_rounds: int = 10_000,
-    runner: Optional[SuperstepRunner] = None,
-) -> DataFrame:
-    """Bertsekas forward auction for the weighted assignment problem —
-    the completed loop of the reference's single-round prototype
-    (/root/reference/Applications/BipartiteMatchings/auction.cpp:338-446:
-    SpMV<SubMaxSR> computes each bidder's (best object, profit, second-best
-    profit) — the window ranking here; Invert places the per-object max
-    bid; the Set/revoke pair flips ownership. The reference file stops
-    after one round; this runs the classic price loop to termination).
-
-    Per round every unmatched row vertex (bidder) with a profitable object
-    (profit = w - price > 0, like the reference's ``price>0`` filter) bids
-    ``best - second + eps`` on its best object (ties -> min dst); each
-    object accepts the highest bid (ties -> min src), raises its price by
-    it, and dumps its previous owner. eps-complementary-slackness holds
-    throughout, so on instances admitting a perfect assignment the result
-    is within n*eps of the optimal weight. Returns (src, dst, w).
-    """
-    runner = runner or SuperstepRunner(spark)
-    e = runner.truncate(
-        edges.groupBy("src", "dst").agg(F.max("w").alias("w"))
-    )
-    prices = runner.truncate(
-        e.select("dst").distinct().select("dst", F.lit(0.0).alias("price"))
-    )
-    match = runner.truncate(
-        spark.createDataFrame([], "src long, dst long")
-    )
-    w_rank = Window.partitionBy("src").orderBy(
-        F.col("profit").desc(), F.col("dst").asc()
-    )
-    for rnd in range(max_rounds):
-        unmatched = e.select("src").distinct().join(
-            match.select("src"), on="src", how="left_anti"
-        )
-        profits = (
-            e.join(unmatched, on="src")
-            .join(prices, on="dst")
-            .select("src", "dst", (F.col("w") - F.col("price")).alias("profit"))
-        )
-        top2 = (
-            profits.withColumn("_rn", F.row_number().over(w_rank))
-            .filter(F.col("_rn") <= 2)
-        )
-        best = top2.filter(F.col("_rn") == 1).select(
-            "src", "dst", F.col("profit").alias("p1")
-        )
-        second = top2.filter(F.col("_rn") == 2).select(
-            "src", F.col("profit").alias("p2")
-        )
-        bids = (
-            best.join(second, on="src", how="left")
-            .filter(F.col("p1") > 0)  # reference: drop unprofitable bidders
-            .select(
-                "src", "dst",
-                (F.col("p1") - F.coalesce(F.col("p2"), F.col("p1")) + F.lit(eps))
-                .alias("bid"),
-            )
-        )
-        w_acc = Window.partitionBy("dst").orderBy(
-            F.col("bid").desc(), F.col("src").asc()
-        )
-        winners = runner.truncate(
-            bids.withColumn("_rn", F.row_number().over(w_acc))
-            .filter(F.col("_rn") == 1)
-            .select("src", "dst", "bid")
-        )
-        if winners.limit(1).count() == 0:
-            break
-        prices = runner.truncate(
-            prices.join(winners.select("dst", "bid"), on="dst", how="left")
-            .select(
-                "dst",
-                (F.col("price") + F.coalesce(F.col("bid"), F.lit(0.0))).alias("price"),
-            )
-        )
-        # objects dump previous owners, winners take over
-        match = runner.truncate(
-            match.join(winners.select("dst"), on="dst", how="left_anti")
-            .unionByName(winners.select("src", "dst"))
-        )
-        runner.save(rnd + 1, {"match": match, "prices": prices}, {})
-    return match.join(e, on=["src", "dst"]).select("src", "dst", "w")
-
-
 def approx_weight_matching(
     spark: SparkSession,
     edges: DataFrame,

@@ -607,6 +607,8 @@ def percolation_profile(
     from combblas_spark.algorithms.cc import cc_minlabel
     from combblas_spark.functions.dedup import md5_60bit
 
+    if not levels:
+        raise ValueError("percolation_profile: levels must be non-empty")
     und = (
         edges.filter(F.col("src") != F.col("dst"))
         .select(
@@ -665,7 +667,7 @@ def percolation_profile(
 
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=len(levels)) as pool:
+        with ThreadPoolExecutor(max_workers=min(len(levels), 3)) as pool:
             rows = list(pool.map(one_level, levels))
         out = rows[0]
         for r in rows[1:]:
@@ -752,6 +754,8 @@ def attack_profile(
     """
     from combblas_spark.algorithms.cc import cc_minlabel
 
+    if not levels:
+        raise ValueError("attack_profile: levels must be non-empty")
     und = (
         edges.filter(F.col("src") != F.col("dst"))
         .select(
@@ -815,7 +819,7 @@ def attack_profile(
 
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=len(levels)) as pool:
+        with ThreadPoolExecutor(max_workers=min(len(levels), 3)) as pool:
             rows = list(pool.map(one_level, levels))
         out = rows[0]
         for r in rows[1:]:

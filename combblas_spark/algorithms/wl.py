@@ -83,18 +83,3 @@ def wl_refine(
         return col.select("id", F.col("c").alias("wl_color"))
     finally:
         sym.unpersist()
-
-
-def wl_color_histogram(
-    spark: SparkSession,
-    edges: DataFrame,
-    rounds: int = 3,
-    runner: Optional[SuperstepRunner] = None,
-) -> DataFrame:
-    """(wl_color, n BIGINT) class sizes after refinement — the graph's
-    structural fingerprint spectrum (orbit-like partition sizes)."""
-    return (
-        wl_refine(spark, edges, rounds=rounds, runner=runner)
-        .groupBy("wl_color")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )

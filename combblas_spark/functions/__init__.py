@@ -1,5 +1,4 @@
 from combblas_spark.functions.text import (  # noqa: F401
-    with_tokens,
     token_stats,
     quality_score,
     language_id,

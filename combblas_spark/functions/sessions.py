@@ -605,7 +605,7 @@ def cusum_alarm(
     and no doubles. The reference level k is the group's integer mean
     (sum DIV n, one broadcast-sized aggregate) unless an explicit
     ``k_ref`` is given (control-chart practice: fix k from a training
-    window — also what the streaming twin needs, since a stream cannot
+    window — also what any online use needs, since a stream cannot
     know its own future mean); the alarm fires when S_t > h_mult * k.
     Output (group, period, x, k, s, alarm) — every column exact
     int64.

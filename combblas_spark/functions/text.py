@@ -23,10 +23,6 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda t: t != "")
 
 
-def with_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.withColumn("tokens", tokens_col(F.col(text_col)))
-
-
 def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, n_chars, n_tokens, n_distinct_tokens, max_token_len) — exact ints."""
     t = tokens_col(F.col(text_col))

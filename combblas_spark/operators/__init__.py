@@ -11,13 +11,11 @@ from combblas_spark.operators.reduce import (  # noqa: F401
     degree_histogram,
     bandwidth,
     profile,
-    load_imbalance,
 )
 from combblas_spark.operators.transform import (  # noqa: F401
     transpose,
     symmetrize,
     remove_loops,
-    add_loops,
     dimapply,
     apply_values,
     prune,
@@ -28,7 +26,6 @@ from combblas_spark.operators.transform import (  # noqa: F401
 from combblas_spark.operators.kselect import kselect, prune_recovery_select  # noqa: F401
 from combblas_spark.operators.indexing import (  # noqa: F401
     subsref,
-    spasgn,
     vec_gather,
     vec_assign,
     vec_set,

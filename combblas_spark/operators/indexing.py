@@ -37,26 +37,6 @@ def subsref(edges: DataFrame, ri: DataFrame, ci: DataFrame) -> DataFrame:
     )
 
 
-def spasgn(edges: DataFrame, ri: DataFrame, ci: DataFrame, b: DataFrame) -> DataFrame:
-    """A(ri,ci) = B: blank the (ri,ci) block, union remapped B
-    (SpParMat.cpp:2435: A = A - S'*A(ri,ci)*S + S'*B*S)."""
-    r = ri.select(F.col("new_id"), F.col("old_id"))
-    c = ci.select(F.col("new_id"), F.col("old_id"))
-    blanked = edges.join(
-        r.select(F.col("old_id").alias("src")), on="src", how="left_anti"
-    ).unionByName(
-        edges.join(r.select(F.col("old_id").alias("src")), on="src", how="leftsemi")
-        .join(c.select(F.col("old_id").alias("dst")), on="dst", how="left_anti")
-    )
-    embedded = (
-        b.join(r, on=b["src"] == r["new_id"], how="inner")
-        .select(F.col("old_id").alias("src"), b["dst"], b["w"])
-        .join(c, on=F.col("dst") == c["new_id"], how="inner")
-        .select(F.col("src"), c["old_id"].alias("dst"), F.col("w"))
-    )
-    return blanked.unionByName(embedded)
-
-
 def vec_gather(
     vec: DataFrame, indices: DataFrame, broadcast_vec: bool = False
 ) -> DataFrame:

@@ -100,31 +100,6 @@ def locality_audit(
     return n.crossJoin(z).crossJoin(rw)
 
 
-def rendezvous_shard(key: Column, n_shards: int, salt: str = "sh") -> Column:
-    """Highest-random-weight (rendezvous) shard assignment: the shard
-    r in [0, n_shards) maximizing md5_60bit(salt|r|key). The property
-    that makes this THE partition-management hash (Thaler-Ravishankar):
-    growing the cluster by one shard moves ONLY the keys the new shard
-    wins (~1/(n+1) of them) — modulo-hashing would reshuffle nearly
-    everything. Pure Column fold (one GREATEST + a CASE chain, no UDF);
-    ties are broken toward the smallest shard id by CASE order, and at
-    60 hash bits they are astronomically rare anyway.
-    """
-    from combblas_spark.functions.dedup import md5_60bit
-
-    hs = [
-        md5_60bit(
-            F.concat(F.lit(f"{salt}{r}|"), key.cast("string"))
-        )
-        for r in range(int(n_shards))
-    ]
-    mx = F.greatest(*hs) if len(hs) > 1 else hs[0]
-    out = F.lit(int(n_shards) - 1).cast("long")
-    for r in range(int(n_shards) - 2, -1, -1):
-        out = F.when(hs[r] == mx, F.lit(r).cast("long")).otherwise(out)
-    return out
-
-
 def reshard_audit(
     df: DataFrame,
     key_col: str,
@@ -157,6 +132,8 @@ def reshard_audit(
     )
 
     def pick(n: int) -> Column:
+        # highest-random-weight shard in [0, n); CASE order breaks ties
+        # toward the smallest shard id
         hs = [F.col(f"_h{r}") for r in range(int(n))]
         mx = F.greatest(*hs) if len(hs) > 1 else hs[0]
         out = F.lit(int(n) - 1).cast("long")

@@ -64,20 +64,6 @@ def profile(edges: DataFrame) -> int:
     return int(row["p"] or 0)
 
 
-def load_imbalance(df: DataFrame) -> float:
-    """max(partition rows) / mean(partition rows) — the reference's
-    LoadImbalance metric (SpParMat.cpp:761), our per-partition skew probe."""
-    counts = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .count()
-        .agg(F.max("count").alias("mx"), F.avg("count").alias("av"))
-        .collect()[0]
-    )
-    if not counts["av"]:
-        return 1.0
-    return float(counts["mx"]) / float(counts["av"])
-
-
 def degree_histogram(edges: DataFrame, dim: str = "row") -> DataFrame:
     """Log2-bucketed degree distribution — the Graph500 kernel-1 summary
     (the reference prints per-run nnz/row statistics from the same

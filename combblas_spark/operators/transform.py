@@ -41,22 +41,6 @@ def remove_loops(edges: DataFrame) -> DataFrame:
     return edges.filter(F.col("src") != F.col("dst"))
 
 
-def add_loops(
-    edges: DataFrame, vertices: DataFrame, value: Column, replace: bool = True
-) -> DataFrame:
-    """Insert (or overwrite) the diagonal. ``vertices`` is (id, ...);
-    ``value`` an expression over the vertex row (e.g. a per-column max,
-    MCL.cpp:462-473)."""
-    diag = vertices.select(
-        F.col("id").alias("src"), F.col("id").alias("dst"), value.alias("w")
-    )
-    base = remove_loops(edges) if replace else edges
-    out = base.unionByName(diag)
-    if not replace:
-        out = out.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-    return out
-
-
 def dimapply(
     edges: DataFrame,
     vec: DataFrame,

@@ -23,8 +23,6 @@ Scale design (10^12 files):
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
@@ -132,8 +130,3 @@ def build_edges_cooccurrence(
     from combblas_spark.sources.graphs import build_graph
 
     return build_graph(pairs)
-
-
-def sha256_py(text: str) -> str:
-    """Driver-side oracle helper for tests."""
-    return hashlib.sha256(text.encode("utf-8")).hexdigest()

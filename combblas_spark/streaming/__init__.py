@@ -1,4 +1,3 @@
 from combblas_spark.streaming.incremental import (  # noqa: F401
-    windowed_event_counts,
     IncrementalCC,
 )

@@ -1,18 +1,18 @@
-"""Structured Streaming layer.
+"""Incremental graph kernels over Structured Streaming edge sources.
 
 CombBLAS has no streaming engine; its closest analog is the incremental
 MCL pipeline (/root/reference/Applications/Incremental/IncClust.h,
 Incremental-Pipeline.cpp) that re-clusters after batch updates. Here:
 
-* ``windowed_event_counts`` — the standard streaming shape: file/rate
-  source -> watermarked event-time window -> aggregation (readStream ->
-  writeStream). Used for edge-rate / ingest monitoring at scale.
 * ``IncrementalCC`` — foreachBatch incremental connected components: each
   micro-batch of new edges updates a persistent label table by
   (a) relabeling batch endpoints through the current labels,
   (b) union-find on the (tiny) batch + affected-component contraction,
   (c) merging back. Matches the reference's "batch update then re-cluster
   the dirty part" strategy rather than full recompute.
+* ``IncrementalPageRank`` — foreachBatch PageRank that appends each
+  micro-batch to a persistent edge table and warm-starts the power
+  iteration from the previous ranks.
 """
 
 from __future__ import annotations
@@ -22,38 +22,6 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: Optional[str] = None,
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: Optional[str] = "value",
-) -> DataFrame:
-    """Watermarked sliding-window counts; works on both batch and streaming
-    DataFrames (same plan — the batch path is the oracle for the stream).
-    ``value_col=None`` (or a column absent from the source) drops the
-    total_value aggregate instead of failing analysis."""
-    win = F.window(F.col(ts_col), window, slide or window)
-    # parquet event times often arrive as TIMESTAMP_NTZ; watermarks need
-    # TimestampType — normalize on both batch and stream paths
-    src = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    if events.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
-    has_value = bool(value_col) and value_col in events.columns
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if has_value:
-        aggs.append(F.sum(value_col).alias("total_value"))
-    cols = [
-        F.col("win.start").alias("win_start"),
-        F.col("win.end").alias("win_end"),
-        F.col(key_col),
-        F.col("n"),
-    ] + ([F.col("total_value")] if has_value else [])
-    return src.groupBy(win.alias("win"), F.col(key_col)).agg(*aggs).select(*cols)
 
 
 class IncrementalCC:

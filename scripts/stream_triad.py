@@ -1,29 +1,13 @@
 """Pinned numpy STREAM-triad bandwidth control (a + 2b -> c), best of 5,
 at two pinned core counts — same protocol as BENCH/TRIAD_4_16_R5.json."""
 import json
-import os
 import subprocess
 import sys
-import time
 
 N = 60_000_000  # 3 arrays x 8B x 60M = 1.44 GB working set
 
 
 def level(cores: int) -> float:
-    code = f"""
-import numpy as np, time, os
-os.environ.setdefault("OMP_NUM_THREADS", "{cores}")
-n = {N}
-a = np.ones(n); b = np.ones(n); c = np.zeros(n)
-# numpy ufuncs are single-threaded; emulate multicore with process split
-best = None
-for _ in range(5):
-    t0 = time.time()
-    np.add(a, 2.0 * b, out=c)
-    dt = time.time() - t0
-    best = dt if best is None else min(best, dt)
-print(best)
-"""
     # split the arrays across `cores` pinned worker processes, each doing n/cores
     per = N // cores
     worker = (
@@ -51,7 +35,6 @@ if __name__ == "__main__":
     lo, hi = 4, 16
     t_lo = level(lo)
     t_hi = level(hi)
-    speedup = t_lo / t_hi * (N // lo) / (N // hi)  # same per-worker n ratio
     # per-worker sizes differ (N/4 vs N/16): normalize to aggregate rate
     rate_lo = N / t_lo
     rate_hi = N / t_hi

@@ -14,6 +14,8 @@ from combblas_spark.algorithms import (
     filtered_bfs,
     rcm_order,
 )
+from combblas_spark.algorithms.kcore import coreness_profile
+from combblas_spark.algorithms.stats import attack_profile, percolation_profile
 from combblas_spark.operators.indexing import relabel_edges, vec_sort, randperm
 from combblas_spark.operators.reduce import bandwidth
 from combblas_spark.operators.transform import symmetrize
@@ -705,6 +707,39 @@ def test_kcore_ktruss_warn_on_round_exhaustion(spark):
     )
     with pytest.warns(RuntimeWarning, match="ktruss: max_rounds"):
         ktruss(spark, e2, k=4, max_rounds=1)
+
+
+@pytest.mark.parametrize(
+    "fn, arg",
+    [
+        (coreness_profile, "ks"),
+        (percolation_profile, "levels"),
+        (attack_profile, "levels"),
+    ],
+    ids=lambda v: getattr(v, "__name__", v),
+)
+def test_profile_thread_pool_bounds(spark, monkeypatch, fn, arg):
+    """The per-level thread pools reject an empty level list by name and
+    open at most 3 driver threads however many levels are asked for."""
+    import concurrent.futures
+
+    e = symmetrize(sevenvertex(spark))
+    with pytest.raises(ValueError, match=f"{fn.__name__}: {arg} must be non-empty"):
+        fn(spark, e, **{arg: ()})
+
+    class PoolOpened(Exception):
+        pass
+
+    workers = []
+
+    def recording_pool(max_workers):
+        workers.append(max_workers)
+        raise PoolOpened
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", recording_pool)
+    with pytest.raises(PoolOpened):
+        fn(spark, e, **{arg: (1, 2, 3, 4, 5)})
+    assert workers == [3]
 
 
 # --------------------------------------------------------- neighbor sampling

@@ -7,10 +7,11 @@ import os
 import pytest
 
 from combblas_spark.algorithms.pagerank import pagerank
-from combblas_spark.algorithms.cc import cc_minlabel
+from combblas_spark.algorithms.bfs import bfs
+from combblas_spark.algorithms.cc import cc_fastsv, cc_minlabel
 from combblas_spark.operators.transform import symmetrize
 from combblas_spark.plans.superstep import SuperstepRunner
-from combblas_spark.sources.fixtures import sevenvertex, weighted_digraph
+from combblas_spark.sources.fixtures import EDGE_SCHEMA, sevenvertex, weighted_digraph
 from tests.util import collect_vec
 
 
@@ -37,16 +38,36 @@ def test_pagerank_resume_equals_uninterrupted(spark, tmp_path):
         assert resumed[k] == pytest.approx(full[k], abs=1e-12)
 
 
-def test_cc_resume(spark, tmp_path):
+@pytest.mark.parametrize("cc", [cc_minlabel, cc_fastsv], ids=lambda f: f.__name__)
+def test_cc_resume(spark, tmp_path, cc):
     edges = symmetrize(sevenvertex(spark))
-    full = collect_vec(cc_minlabel(spark, edges))
+    full = collect_vec(cc(spark, edges))
 
     ckpt = str(tmp_path / "cc")
     r1 = SuperstepRunner(spark, checkpoint_dir=ckpt, every=1)
-    collect_vec(cc_minlabel(spark, edges, max_iter=2, runner=r1))
+    collect_vec(cc(spark, edges, max_iter=2, runner=r1))
+    assert r1.latest()["iteration"] == 2
     r2 = SuperstepRunner(spark, checkpoint_dir=ckpt, every=1)
-    resumed = collect_vec(cc_minlabel(spark, edges, runner=r2))
+    resumed = collect_vec(cc(spark, edges, runner=r2))
     assert resumed == full
+
+
+def test_bfs_resume_equals_uninterrupted(spark, tmp_path):
+    path = [(i, i + 1, 1.0) for i in range(7)]
+    edges = symmetrize(spark.createDataFrame(path, EDGE_SCHEMA))
+
+    def tree(df):
+        return sorted((r["id"], r["parent"], r["depth"]) for r in df.collect())
+
+    full = tree(bfs(spark, edges, root=0))
+    assert max(d for _, _, d in full) == 7
+
+    ckpt = str(tmp_path / "bfs")
+    r1 = SuperstepRunner(spark, checkpoint_dir=ckpt, every=1)
+    bfs(spark, edges, root=0, max_iter=2, runner=r1).count()
+    assert r1.latest()["iteration"] == 2
+    r2 = SuperstepRunner(spark, checkpoint_dir=ckpt, every=1)
+    assert tree(bfs(spark, edges, root=0, runner=r2)) == full
 
 
 def test_manifest_contents(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Training-pipeline function tests (dedup / similarity / text / multimodal)."""
+"""Training-pipeline function tests (dedup / similarity / text)."""
 
 import hashlib
 
@@ -20,7 +20,6 @@ from combblas_spark.functions import (
     cosine_topk,
     lsh_ann_topk,
 )
-from combblas_spark.functions.multimodal import synth_media, extract_features, frame_sample
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
@@ -200,23 +199,6 @@ def test_lsh_ann_is_subset_quality(spark):
     # every returned neighbor really is in the same noise-cluster for most queries
     same = sum(1 for r in rows if r["neighbor_id"] % 10 == r["query_id"] % 10)
     assert same / len(rows) > 0.6
-
-
-def test_multimodal_plumbing(spark):
-    media = synth_media(spark, n=30)
-    feats = extract_features(media, dim=16, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r["feature"]) == 16 for r in rows)
-    # determinism: same payload -> same feature
-    again = {r["media_id"]: r["feature"] for r in extract_features(media, dim=16, fake=True).collect()}
-    first = {r["media_id"]: r["feature"] for r in rows}
-    assert first == again
-    fs = frame_sample(media, every_n=2)
-    assert fs.filter(F.col("frame_idx") % 2 != 0).count() == 0
-    # non-fake path raises (decode libs absent) at execution time
-    with pytest.raises(Exception):
-        extract_features(media, dim=16, fake=False).collect()
 
 
 def test_token_entropy(spark):

@@ -9,7 +9,6 @@ from combblas_spark.algorithms import (
     maximal_matching,
     maximum_matching,
     approx_weight_matching,
-    auction_matching,
 )
 from tests.util import hopcroft_karp, max_weight_matching_brute
 
@@ -110,41 +109,6 @@ def test_approx_weight_matching_half_optimal(spark):
         ms = {s for s, _, _ in got}
         md = {d for _, d, _ in got}
         assert not [e for e in wpairs if e[0] not in ms and e[1] not in md]
-
-
-def test_auction_matching_near_optimal_on_dense(spark):
-    """On complete bipartite instances (a perfect assignment exists) the
-    auction with eps-complementary slackness lands within n*eps of the
-    brute-force optimum."""
-    for seed, n in ((7, 4), (8, 5)):
-        rng = random.Random(seed)
-        wpairs = [
-            (i, 100 + j, round(rng.uniform(1.0, 9.0), 2))
-            for i in range(n)
-            for j in range(n)
-        ]
-        df = spark.createDataFrame(wpairs, "src long, dst long, w double")
-        got = [
-            (r["src"], r["dst"], r["w"])
-            for r in auction_matching(spark, df, eps=0.05).collect()
-        ]
-        _assert_valid_matching(
-            [(s, d) for s, d, _ in got], [(s, d) for s, d, _ in wpairs]
-        )
-        assert len(got) == n  # perfect assignment
-        opt = max_weight_matching_brute(wpairs)
-        assert sum(w for _, _, w in got) >= opt - n * 0.05 - 1e-9
-
-
-def test_auction_matching_sparse_validity(spark):
-    rng = random.Random(11)
-    wpairs = sorted({(rng.randrange(8), 100 + rng.randrange(6)) for _ in range(20)})
-    wpairs = [(s, d, round(rng.uniform(0.5, 5.0), 2)) for s, d in wpairs]
-    df = spark.createDataFrame(wpairs, "src long, dst long, w double")
-    got = [(r["src"], r["dst"]) for r in auction_matching(spark, df, eps=0.1).collect()]
-    _assert_valid_matching(got, [(s, d) for s, d, _ in wpairs])
-    # every positive-weight graph admits at least one profitable bid round
-    assert len(got) >= 1
 
 
 def test_approx_weight_matching_fixed_rounds_deterministic(spark):

@@ -1,287 +1,13 @@
-"""Property-based (hypothesis) tests: random-input round-trip laws for the
-pure-python codecs (WAV/BMP/PNG/JPEG), randomized container layouts for the
-MP4 stsz x stsc x stco resolution and the MP3 frame walk, and a Spark law
-(kselect == brute-force per-group top-k) at a small example budget.
-
-These complement the fixed-fixture tests in test_codecs/test_jpeg/
-test_containers: hypothesis explores the input lattice (odd dims, row
-padding, filter mixes, multi-run chunk layouts, resync junk) that
-hand-picked fixtures can miss. All generators are deterministic under
-hypothesis's derandomized CI profile (seed printed on failure).
+"""Property-based (hypothesis) tests: a Spark law (kselect == brute-force
+per-group top-k) at a small example budget. Hypothesis explores random
+weighted bipartite edge sets with duplicate weights that hand-picked
+fixtures can miss; generators are deterministic under hypothesis's
+derandomized CI profile (seed printed on failure).
 """
 
-import struct
-
-import numpy as np
-import pyspark.sql.functions as F
 from hypothesis import given, settings, HealthCheck
 from hypothesis import strategies as st
 
-from combblas_spark.functions.codecs import (
-    decode_bmp24,
-    decode_png,
-    decode_wav_pcm16,
-    encode_bmp24,
-    encode_png,
-    encode_wav_pcm16,
-)
-from combblas_spark.functions.containers import (
-    mp4_sample_ranges,
-    parse_mp3_meta,
-)
-from combblas_spark.functions.jpeg import decode_jpeg, encode_jpeg
-
-_SLOW = settings(
-    max_examples=25, deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
-)
-
-
-# --------------------------------------------------------------------- WAV
-
-@_SLOW
-@given(
-    samples=st.lists(
-        st.floats(min_value=-2.0, max_value=2.0, allow_nan=False), min_size=1,
-        max_size=2048,
-    ),
-    rate=st.sampled_from([8_000, 16_000, 22_050, 44_100]),
-)
-def test_wav_roundtrip_prop(samples, rate):
-    sig = np.asarray(samples, dtype=np.float64)
-    out, got_rate = decode_wav_pcm16(encode_wav_pcm16(sig, rate))
-    assert got_rate == rate
-    assert out.shape == sig.shape
-    # encoder clips to [-1, 1] then quantizes to 16 bits
-    assert np.max(np.abs(out - np.clip(sig, -1.0, 1.0))) <= 1.0 / 32767.0 + 1e-12
-
-
-# --------------------------------------------------------------------- BMP
-
-@_SLOW
-@given(data=st.data(), h=st.integers(1, 24), w=st.integers(1, 24))
-def test_bmp_roundtrip_prop(data, h, w):
-    # w not divisible by 4 exercises the per-row pad path
-    img = np.asarray(
-        data.draw(
-            st.lists(st.integers(0, 255), min_size=h * w * 3, max_size=h * w * 3)
-        ),
-        dtype=np.uint8,
-    ).reshape(h, w, 3)
-    assert np.array_equal(decode_bmp24(encode_bmp24(img)), img)
-
-
-# --------------------------------------------------------------------- PNG
-
-@_SLOW
-@given(data=st.data(), h=st.integers(1, 16), w=st.integers(1, 16),
-       c=st.sampled_from([3, 4]))
-def test_png_roundtrip_prop(data, h, w, c):
-    img = np.asarray(
-        data.draw(
-            st.lists(st.integers(0, 255), min_size=h * w * c, max_size=h * w * c)
-        ),
-        dtype=np.uint8,
-    ).reshape(h, w, c)
-    assert np.array_equal(decode_png(encode_png(img)), img)
-
-
-def _png_forward_filter(row: np.ndarray, prior: np.ndarray, ft: int,
-                        bpp: int) -> bytes:
-    """Reference forward scanline filter (PNG spec 9.2) for building
-    test payloads — ints mod 256 throughout."""
-    raw = row.astype(np.int64)
-    prv = prior.astype(np.int64)
-    n = len(raw)
-    left = np.zeros(n, dtype=np.int64)
-    left[bpp:] = raw[:-bpp]
-    ul = np.zeros(n, dtype=np.int64)
-    ul[bpp:] = prv[:-bpp]
-    if ft == 0:
-        out = raw
-    elif ft == 1:
-        out = raw - left
-    elif ft == 2:
-        out = raw - prv
-    elif ft == 3:
-        out = raw - (left + prv) // 2
-    else:  # Paeth
-        p = left + prv - ul
-        pa, pb, pc = np.abs(p - left), np.abs(p - prv), np.abs(p - ul)
-        pred = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prv, ul))
-        out = raw - pred
-    return (out % 256).astype(np.uint8).tobytes()
-
-
-@_SLOW
-@given(data=st.data(), h=st.integers(1, 12), w=st.integers(1, 12),
-       c=st.sampled_from([3, 4]))
-def test_png_random_filters_prop(data, h, w, c):
-    """decode_png unfilters ALL five scanline filters: build a PNG whose
-    rows use a random filter mix and demand exact recovery."""
-    import zlib
-
-    img = np.asarray(
-        data.draw(
-            st.lists(st.integers(0, 255), min_size=h * w * c, max_size=h * w * c)
-        ),
-        dtype=np.uint8,
-    ).reshape(h, w, c)
-    fts = data.draw(st.lists(st.integers(0, 4), min_size=h, max_size=h))
-    raw = bytearray()
-    prior = np.zeros(w * c, dtype=np.uint8)
-    for y in range(h):
-        row = img[y].reshape(-1)
-        raw += bytes([fts[y]]) + _png_forward_filter(row, prior, fts[y], c)
-        prior = row
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, {3: 2, 4: 6}[c], 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-    assert np.array_equal(decode_png(payload), img)
-
-
-# -------------------------------------------------------------------- JPEG
-
-@_SLOW
-@given(data=st.data(), bh=st.integers(1, 4), bw=st.integers(1, 4),
-       crop_h=st.integers(0, 7), crop_w=st.integers(0, 7))
-def test_jpeg_blockconstant_prop(data, bh, bw, crop_h, crop_w):
-    """8x8-block-constant RGB images survive the 4:4:4 q95 round trip to
-    within DC-quantization + colorspace rounding (every AC coefficient is
-    exactly zero, so only the DC step and the RGB<->YCbCr floats move).
-    Non-multiple-of-8 dims exercise the edge-replication pad (replicated
-    edges keep blocks constant)."""
-    cells = np.asarray(
-        data.draw(
-            st.lists(st.integers(0, 255), min_size=bh * bw * 3,
-                     max_size=bh * bw * 3)
-        ),
-        dtype=np.uint8,
-    ).reshape(bh, bw, 3)
-    img = np.repeat(np.repeat(cells, 8, axis=0), 8, axis=1)
-    h = max(1, img.shape[0] - crop_h)
-    w = max(1, img.shape[1] - crop_w)
-    img = img[:h, :w]
-    out = decode_jpeg(encode_jpeg(img, quality=95))
-    assert out.shape == img.shape
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 6
-
-
-# ----------------------------------------------------------------- MP4/MP3
-
-def _box(btype: bytes, payload: bytes) -> bytes:
-    return struct.pack(">I", 8 + len(payload)) + btype + payload
-
-
-def _full(version: int, body: bytes) -> bytes:
-    return bytes([version, 0, 0, 0]) + body
-
-
-def _build_mp4_chunked(frames, spc_list, gaps):
-    """ISO-BMFF fixture with an ARBITRARY chunk layout: chunk i holds
-    spc_list[i] consecutive samples, preceded by gaps[i] junk bytes inside
-    mdat — exercises multi-run stsc compression + absolute stco offsets."""
-    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2")
-    mdat_body = bytearray()
-    offsets = []
-    si = 0
-    base = len(ftyp) + 8  # file offset of mdat payload byte 0
-    for ci, spc in enumerate(spc_list):
-        mdat_body += b"\xee" * gaps[ci]
-        offsets.append(base + len(mdat_body))
-        for _ in range(spc):
-            mdat_body += frames[si]
-            si += 1
-    mdat = _box(b"mdat", bytes(mdat_body))
-    # compress consecutive equal samples-per-chunk into stsc runs
-    runs = []
-    for ci, spc in enumerate(spc_list):
-        if not runs or runs[-1][1] != spc:
-            runs.append((ci + 1, spc))
-    stsz = _box(b"stsz", _full(0, struct.pack(">II", 0, len(frames))
-                               + b"".join(struct.pack(">I", len(f)) for f in frames)))
-    stsc = _box(b"stsc", _full(0, struct.pack(">I", len(runs))
-                               + b"".join(struct.pack(">III", fc, n, 1)
-                                          for fc, n in runs)))
-    stco = _box(b"stco", _full(0, struct.pack(">I", len(offsets))
-                               + b"".join(struct.pack(">I", o) for o in offsets)))
-    stbl = _box(b"stbl", stsz + stsc + stco)
-    hdlr = _box(b"hdlr", _full(0, struct.pack(">I", 0) + b"vide"
-                               + b"\x00" * 12 + b"video\x00"))
-    mdhd = _box(b"mdhd", _full(0, struct.pack(">IIII", 0, 0, 600, 600)
-                               + b"\x00" * 4))
-    mdia = _box(b"mdia", mdhd + hdlr + _box(b"minf", stbl))
-    moov = _box(b"moov", _box(b"mvhd", _full(0, struct.pack(">IIII", 0, 0, 600, 600)
-                                             + b"\x00" * 80))
-                + _box(b"trak", mdia))
-    return ftyp + mdat + moov
-
-
-@_SLOW
-@given(data=st.data(), n=st.integers(1, 30))
-def test_mp4_sample_ranges_chunked_prop(data, n):
-    frames = [
-        bytes(data.draw(st.lists(st.integers(0, 255), min_size=1, max_size=24)))
-        for _ in range(n)
-    ]
-    # random partition of n samples into chunks
-    spc_list = []
-    left = n
-    while left > 0:
-        take = data.draw(st.integers(1, left))
-        spc_list.append(take)
-        left -= take
-    gaps = [data.draw(st.integers(0, 8)) for _ in spc_list]
-    payload = _build_mp4_chunked(frames, spc_list, gaps)
-    ranges = mp4_sample_ranges(payload, handler="vide")
-    assert len(ranges) == n
-    for f, (off, size) in zip(frames, ranges):
-        assert payload[off: off + size] == f
-
-
-@_SLOW
-@given(
-    data=st.data(),
-    n=st.integers(1, 12),
-    bri=st.integers(1, 14),
-    sri=st.integers(0, 2),
-    id3_len=st.integers(0, 64),
-)
-def test_mp3_meta_prop(data, n, bri, sri, id3_len):
-    """Random frame count x bitrate x samplerate behind a random-size ID3v2
-    prefix and trailing junk (0xFF excluded so no false sync)."""
-    kbps = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320][bri]
-    rate = [44100, 48000, 32000][sri]
-    flen = 144 * kbps * 1000 // rate
-    hdr = bytes([0xFF, 0xFB, (bri << 4) | (sri << 2), 0x00])
-    body = bytes(
-        data.draw(st.lists(st.integers(0, 254), min_size=flen - 4,
-                           max_size=flen - 4))
-    )
-    id3 = (b"ID3\x04\x00\x00"
-           + bytes([(id3_len >> 21) & 0x7F, (id3_len >> 14) & 0x7F,
-                    (id3_len >> 7) & 0x7F, id3_len & 0x7F])
-           + bytes(data.draw(st.lists(st.integers(0, 255), min_size=id3_len,
-                                      max_size=id3_len))))
-    tail = bytes(data.draw(st.lists(st.integers(0, 254), min_size=0, max_size=3)))
-    meta = parse_mp3_meta(id3 + (hdr + body) * n + tail)
-    assert meta["n_frames"] == n
-    assert meta["sample_rate"] == rate
-    assert meta["mean_bitrate_kbps"] == kbps
-    assert abs(meta["duration_s"] - n * 1152 / rate) < 1e-9
-
-
-# -------------------------------------------------------------- Spark laws
 
 @settings(max_examples=6, deadline=None,
           suppress_health_check=list(HealthCheck))

@@ -1053,52 +1053,6 @@ def test_monthly_growth_exact_bp(spark):
     assert {(r.month, r.bp) for r in g} == {("2024-02", 2500), ("2024-03", -3600)}
 
 
-# ------------------------------------------------------------- streaming ewma
-
-
-def test_streaming_ewma_equals_batch(spark, tmp_path):
-    """Cross-batch stateful EWMA == batch ewma_drift on the
-    concatenated input (the state-carrying boundary is mid-series)."""
-    import os
-
-    from combblas_spark.functions.sessions import ewma_drift
-    from combblas_spark.streaming.stateful import streaming_ewma
-
-    schema = "g string, period string, x long"
-    rows1 = [("a", "d1", 8), ("a", "d2", 8), ("b", "d1", 5)]
-    rows2 = [("a", "d3", 40), ("a", "d4", 8), ("b", "d2", 50)]
-    src = str(tmp_path / "counts")
-    os.makedirs(src)
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(rows2, schema).coalesce(1).write.parquet(src + "/b2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-    )
-    q = (
-        streaming_ewma(stream)
-        .writeStream.format("memory")
-        .queryName("ewma_state_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.g, r.t, r.period, r.x, r.num_prev, r.alert)
-        for r in spark.sql("SELECT * FROM ewma_state_t").collect()
-    }
-    batch_df = spark.createDataFrame(rows1 + rows2, schema)
-    want = {
-        (r.g, r.t, r.period, r.x, r.num_prev, r.alert)
-        for r in ewma_drift(batch_df, "g", "period", "x").collect()
-    }
-    assert got == want and len(got) == 6
-
-
 # ----------------------------------------------------------------- cusum_alarm
 
 
@@ -1359,51 +1313,6 @@ def test_fof_recommend_hub_cap_drops_middle(spark):
     assert len(full) > 0  # leaves recommend each other through the hub
     capped = fof_recommend(e, k=3, max_middle_degree=4).collect()
     assert capped == []  # hub degree 5 > 4 -> no middles remain
-
-
-# ------------------------------------------------------------ streaming cusum
-
-
-def test_streaming_cusum_equals_batch(spark, tmp_path):
-    import os
-
-    from combblas_spark.functions.sessions import cusum_alarm
-    from combblas_spark.streaming.stateful import streaming_cusum
-
-    schema = "g string, period string, x long"
-    rows1 = [("a", "d1", 8), ("a", "d2", 9), ("b", "d1", 8)]
-    rows2 = [("a", "d3", 30), ("a", "d4", 31), ("b", "d2", 7)]
-    src = str(tmp_path / "counts")
-    os.makedirs(src)
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(rows2, schema).coalesce(1).write.parquet(src + "/b2")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-    )
-    q = (
-        streaming_cusum(stream, k_ref=9)
-        .writeStream.format("memory")
-        .queryName("cusum_state_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.g, r.period, r.x, r.k, r.s, r.alarm)
-        for r in spark.sql("SELECT * FROM cusum_state_t").collect()
-    }
-    batch = spark.createDataFrame(rows1 + rows2, schema)
-    want = {
-        (r.g, r.period, r.x, r.k, r.s, r.alarm)
-        for r in cusum_alarm(batch, "g", "period", "x", k_ref=9).collect()
-    }
-    assert got == want and len(got) == 6
-    # the level shift crossing the batch boundary must alarm
-    assert ("a", "d4", 31, 9, 43, 1) in got
 
 
 # ------------------------------------------------------------ final plan audit

@@ -1,12 +1,10 @@
-"""Streaming + Matrix Market IO tests."""
-
-import os
+"""Incremental graph kernels (CC, PageRank) + Matrix Market / vector / JSONL IO tests."""
 
 import pyspark.sql.functions as F
 
 from combblas_spark.sources.fixtures import sevenvertex, SEVENVERTEX
 from combblas_spark.sources.matrix_market import read_mm, write_mm
-from combblas_spark.streaming.incremental import windowed_event_counts, IncrementalCC
+from combblas_spark.streaming.incremental import IncrementalCC
 from combblas_spark.operators.transform import symmetrize
 from combblas_spark.algorithms.cc import cc_minlabel
 from tests.util import collect_vec, union_find_components
@@ -53,42 +51,6 @@ def test_mm_pattern_banner(spark, tmp_path):
     assert got == [(0, 1, 1.0), (1, 0, 1.0)]
 
 
-def test_windowed_counts_batch_oracle(spark, tmp_path):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    batch = windowed_event_counts(ev, window="1 hour")
-    rows = batch.collect()
-    assert len(rows) > 0
-    total = sum(r["n"] for r in rows)
-    assert total == ev.count()
-
-
-def test_windowed_counts_streaming_equals_batch(spark, tmp_path):
-    src_dir = str(tmp_path / "ev_stream")
-    os.makedirs(src_dir)
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    ev.write.mode("overwrite").parquet(src_dir)
-
-    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
-    out = windowed_event_counts(stream, window="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["win_start"], r["event_type"]): r["n"]
-        for r in spark.sql("select * from win_counts").collect()
-    }
-    want = {
-        (r["win_start"], r["event_type"]): r["n"]
-        for r in windowed_event_counts(ev, window="1 hour").collect()
-    }
-    assert got == want
-
-
 def test_incremental_cc_matches_batch(spark, tmp_path):
     edges = symmetrize(sevenvertex(spark)).select("src", "dst")
     rows = edges.collect()
@@ -114,42 +76,6 @@ def test_vec_text_roundtrip(spark, tmp_path):
     write_vec(vec, p, one_based=True)
     back = {r["id"]: r["val"] for r in read_vec(spark, p, one_based=True).collect()}
     assert back == {0: 1.5, 3: -2.0, 7: 0.25}
-
-
-def test_streaming_dedup_exact_stateful(spark, tmp_path):
-    """applyInPandasWithState dedup: duplicates are dropped WITHIN a
-    micro-batch and ACROSS micro-batches (state carries the seen-digest
-    set); first occurrence (min id) wins."""
-    from combblas_spark.streaming.stateful import streaming_dedup_exact
-
-    src = str(tmp_path / "docs")
-    os.makedirs(src)
-    schema = "doc_id long, text string"
-    # batch 1: a, b, dup-of-a ; batch 2: dup-of-b (cross-batch), c
-    spark.createDataFrame(
-        [(0, "alpha"), (1, "beta"), (2, "alpha")], schema
-    ).coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(
-        [(3, "beta"), (4, "gamma")], schema
-    ).coalesce(1).write.parquet(src + "/b2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-    )
-    q = (
-        streaming_dedup_exact(stream, n_shards=4)
-        .writeStream.format("memory")
-        .queryName("dedup_state_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM dedup_state_t").collect()
-    assert sorted(r["doc_id"] for r in rows) == [0, 1, 4]
 
 
 def test_write_clusters_roundtrip(spark, tmp_path):
@@ -184,363 +110,6 @@ def test_write_clusters_roundtrip(spark, tmp_path):
     write_clusters(labels, p2)
     [f2] = glob.glob(p2 + "/part-*")
     assert [ln.strip() for ln in open(f2) if ln.strip()] == ["0 1", "2 3", "4"]
-
-
-def test_streaming_near_dups_stateful(spark, tmp_path):
-    """Stateful LSH near-dup candidates: bucket state carries ACROSS
-    micro-batches (the cross-batch pair 0-10 only exists because batch 1's
-    members persist), and the emitted pair set equals the batch
-    lsh_candidate_pairs oracle on the same corpus."""
-    from combblas_spark.streaming.stateful import streaming_near_dups
-    from combblas_spark.functions.dedup import (
-        shingles,
-        minhash_signatures,
-        lsh_candidate_pairs,
-    )
-
-    rows1 = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, "completely different text about spark engines and semirings"),
-        (2, "another unrelated document mentioning hash joins and shuffles"),
-    ]
-    rows2 = [
-        (10, "the quick brown fox jumps over the lazy dog"),   # dup of 0
-        (11, "completely different text about spark engines and semirings"),
-        (12, "short"),                                          # no 3-shingle... has none? 1 token
-    ]
-    schema = "doc_id long, text string"
-    src = str(tmp_path / "docs")
-    os.makedirs(src)
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(rows2, schema).coalesce(1).write.parquet(src + "/b2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-    )
-    q = (
-        streaming_near_dups(stream, k=3, num_hashes=4, bands=2, rows_per_band=2)
-        .writeStream.format("memory")
-        .queryName("lsh_state_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_lsh"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in spark.sql("SELECT * FROM lsh_state_t").collect()
-    }
-
-    batch_docs = spark.createDataFrame(rows1 + rows2, schema)
-    sig = minhash_signatures(shingles(batch_docs, k=3), num_hashes=4)
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs(sig, bands=2, rows_per_band=2).collect()
-    }
-    assert got == want
-    assert (0, 10) in got  # the cross-batch duplicate was caught
-
-
-def test_streaming_sessionize_stateful(spark, tmp_path):
-    """Cross-batch stateful sessionization: a session spanning the
-    micro-batch boundary merges in state; closed sessions equal the batch
-    operator's output minus each user's (still-open) final session."""
-    import datetime
-
-    from combblas_spark.functions.sessions import sessionize
-    from combblas_spark.streaming.stateful import streaming_sessionize
-
-    def ev(eid, uid, minute, etype, value):
-        return (
-            eid,
-            datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=minute),
-            uid,
-            etype,
-            value,
-        )
-
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long, "
-        "event_type string, value double"
-    )
-    b1 = [ev(1, 7, 0, "a", 1.0), ev(2, 7, 10, "b", 2.25), ev(5, 8, 0, "c", 0.5)]
-    b2 = [ev(3, 7, 20, "a", 3.0), ev(4, 7, 500, "b", 4.0), ev(6, 8, 400, "c", 1.5)]
-    src = str(tmp_path / "events")
-    os.makedirs(src)
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(src + "/b2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-    )
-    q = (
-        streaming_sessionize(stream, gap_seconds=3600)
-        .writeStream.format("memory")
-        .queryName("sess_state_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        tuple(r) for r in spark.sql(
-            "SELECT user_id, session_id, n_events, start_us, end_us, "
-            "n_types, value_milli FROM sess_state_t"
-        ).collect()
-    }
-
-    batch = sessionize(spark.createDataFrame(b1 + b2, schema), gap_seconds=3600)
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    last = Window.partitionBy("user_id")
-    want = {
-        tuple(r)
-        for r in batch.withColumn(
-            "mx", F.max("session_id").over(last)
-        ).filter(F.col("session_id") < F.col("mx"))
-        .select(
-            "user_id", "session_id", "n_events", "start_us", "end_us",
-            "n_types", "value_milli",
-        ).collect()
-    }
-    assert got == want
-    # the boundary-spanning session merged: user 7 session 1 has 3 events
-    u7s1 = [r for r in got if r[0] == 7 and r[1] == 1]
-    assert u7s1 and u7s1[0][2] == 3 and u7s1[0][6] == 1000 + 2250 + 3000
-
-
-def test_streaming_heavy_hitters_stateful(spark, tmp_path):
-    """Cross-batch running token counts: a token is emitted exactly once,
-    in the micro-batch where its RUNNING count first reaches the
-    threshold — including counts accumulated across batch boundaries."""
-    from combblas_spark.streaming.stateful import streaming_heavy_hitters
-
-    src = str(tmp_path / "hh")
-    os.makedirs(src)
-    schema = "doc_id long, text string"
-    # 'hot' crosses (3) inside batch 1; 'warm' needs both batches (2+2);
-    # 'cold' never reaches the threshold
-    spark.createDataFrame(
-        [(0, "hot hot warm"), (1, "hot warm cold")], schema
-    ).coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(
-        [(2, "warm warm cold"), (3, "quiet")], schema
-    ).coalesce(1).write.parquet(src + "/b2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-    )
-    q = (
-        streaming_heavy_hitters(stream, threshold=3, n_shards=4)
-        .writeStream.format("memory")
-        .queryName("hh_state_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = {r["token"]: r["cnt"] for r in spark.sql("SELECT * FROM hh_state_t").collect()}
-    # batch oracle: tokens with corpus count >= 3
-    assert set(rows) == {"hot", "warm"}
-    assert rows["hot"] == 3    # crossed inside batch 1
-    assert rows["warm"] == 4   # crossed only after batch 2 (2 + 2)
-
-
-def test_streaming_heavy_hitters_capacity_eviction(spark, tmp_path):
-    """Space-saving capacity bound: the smallest (count, token) entry is
-    evicted when a shard's map exceeds capacity, so an evicted token's
-    count restarts — the documented memory/recall trade."""
-    from combblas_spark.streaming.stateful import streaming_heavy_hitters
-
-    src = str(tmp_path / "hhcap")
-    os.makedirs(src)
-    schema = "doc_id long, text string"
-    spark.createDataFrame([(0, "a a b")], schema).coalesce(1).write.parquet(
-        src + "/b1"
-    )
-    spark.createDataFrame([(1, "b b")], schema).coalesce(1).write.parquet(
-        src + "/b2"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-    )
-    q = (
-        streaming_heavy_hitters(stream, threshold=2, capacity=1, n_shards=1)
-        .writeStream.format("memory")
-        .queryName("hh_cap_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = {r["token"] for r in spark.sql("SELECT * FROM hh_cap_t").collect()}
-    # 'b' totals 3 >= 2 but is evicted by the capacity-1 map both rounds
-    # ((-2, 'a') sorts before (-2, 'b')), so only 'a' ever emits
-    assert rows == {"a"}
-
-
-def test_streaming_funnel_stateful(spark, tmp_path):
-    """Cross-batch stateful funnel: step advances spanning the micro-batch
-    boundary ride the (next_idx, t_prev) state; per-step completion counts
-    equal the batch funnel's n_users on the same data."""
-    import datetime
-
-    from combblas_spark.functions.sessions import funnel
-    from combblas_spark.streaming.stateful import streaming_funnel
-
-    def ev(eid, uid, minute, etype):
-        return (
-            eid,
-            datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=minute),
-            uid,
-            etype,
-            1.0,
-        )
-
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long, "
-        "event_type string, value double"
-    )
-    # user 1: view+click in b1, buy in b2 (cross-batch advance)
-    # user 2: click before view (never advances past step 1, view in b2)
-    # user 3: view in b1, click in b2 but OUTSIDE the 1h window
-    b1 = [ev(1, 1, 0, "view"), ev(2, 1, 5, "click"),
-          ev(3, 2, 0, "click"), ev(4, 3, 10, "view")]
-    b2 = [ev(5, 1, 50, "buy"), ev(6, 2, 80, "view"), ev(7, 3, 200, "click")]
-    src = str(tmp_path / "fevents")
-    os.makedirs(src)
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(src + "/b2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-    )
-    q = (
-        streaming_funnel(stream, ["view", "click", "buy"], window_seconds=3600)
-        .writeStream.format("memory")
-        .queryName("funnel_state_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_funnel"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql(
-        "SELECT user_id, step_idx, step, at_us FROM funnel_state_t"
-    ).collect()
-    # user 1 advances through all three (buy crosses the batch boundary);
-    # user 2 reaches only step 1 (in b2); user 3's click is out-of-window
-    got = {(r["user_id"], r["step_idx"], r["step"]) for r in rows}
-    assert got == {
-        (1, 1, "view"), (1, 2, "click"), (1, 3, "buy"),
-        (2, 1, "view"), (3, 1, "view"),
-    }
-    # completion timestamps are the earliest-completion times
-    at = {(r["user_id"], r["step_idx"]): r["at_us"] for r in rows}
-    t0 = int(datetime.datetime(2024, 1, 1).timestamp() * 1_000_000)
-    assert at[(1, 2)] == t0 + 5 * 60 * 1_000_000
-    assert at[(1, 3)] == t0 + 50 * 60 * 1_000_000
-    # aggregate completions == batch funnel counts
-    from collections import Counter
-    step_counts = Counter(r["step_idx"] for r in rows)
-    batch = {
-        r["step_idx"]: r["n_users"]
-        for r in funnel(
-            spark.createDataFrame(b1 + b2, schema),
-            ["view", "click", "buy"],
-            window_seconds=3600,
-        ).collect()
-    }
-    assert {k: step_counts.get(k, 0) for k in batch} == batch
-
-
-def test_streaming_sessionize_watermark_timeout(spark, tmp_path):
-    """close_by_watermark=True: once the watermark passes end + gap, the
-    open session is emitted via EventTimeTimeout and its state removed —
-    the straggler-close path the NoTimeout variant documents."""
-    import datetime
-
-    from combblas_spark.streaming.stateful import streaming_sessionize
-
-    def ev(eid, uid, minute, etype, value):
-        return (
-            eid,
-            datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=minute),
-            uid,
-            etype,
-            value,
-        )
-
-    # watermarks require tz-aware TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP
-    # _TYPE on TIMESTAMP_NTZ) — a production caller casts before
-    # withWatermark; the rollup math is tz-free integer microseconds either
-    # way
-    schema = (
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double"
-    )
-    day = 24 * 60
-    # b1: user 7's whole session (2 events). b2/b3: far-future events from
-    # other users, pushing the watermark far past user 7's end + gap so the
-    # third trigger fires user 7's timeout.
-    b1 = [ev(1, 7, 0, "a", 1.0), ev(2, 7, 10, "b", 2.25)]
-    b2 = [ev(3, 8, 30 * day, "c", 0.5)]
-    b3 = [ev(4, 9, 31 * day, "d", 1.5)]
-    src = str(tmp_path / "twevents")
-    os.makedirs(src)
-    for name, rows in (("b1", b1), ("b2", b2), ("b3", b3)):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            f"{src}/{name}"
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-        .withWatermark("ts", "1 minute")
-    )
-    q = (
-        streaming_sessionize(stream, gap_seconds=3600, close_by_watermark=True)
-        .writeStream.format("memory")
-        .queryName("sess_timeout_t")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess_tw"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        tuple(r)
-        for r in spark.sql(
-            "SELECT user_id, session_id, n_events, start_us, end_us, "
-            "n_types, value_milli FROM sess_timeout_t"
-        ).collect()
-    }
-    t0 = int(datetime.datetime(2024, 1, 1).timestamp() * 1_000_000)
-    # user 7's single session closed BY TIMEOUT (never by a later event)
-    assert (7, 1, 2, t0, t0 + 10 * 60 * 1_000_000, 2, 3250) in got
-    # user 8 times out too: availableNow runs a final no-data batch whose
-    # watermark (day31 - 1min) passes day30 + gap. user 9 stays open — the
-    # watermark never passes ITS end + gap.
-    day_us = 24 * 60 * 60 * 1_000_000
-    assert (8, 1, 1, t0 + 30 * day_us, t0 + 30 * day_us, 1, 500) in got
-    assert {r[0] for r in got} == {7, 8}
-    assert len(got) == 2
 
 
 def test_incremental_pagerank_matches_batch(spark, tmp_path):
