@@ -302,10 +302,14 @@ def main():
     spark.stop()
 
 
-def make_session(cpus: str) -> SparkSession:
-    # driver heap: half of physical memory (MemTotal), capped at 20g, so the
-    # JVM also starts on small hosts
+def driver_memory(cap_gb: int) -> str:
+    """Driver heap: half of physical memory (MemTotal), capped at ``cap_gb``,
+    so the JVM also starts on small hosts."""
     mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(cap_gb * 1024, mem_mb // 2)}m"
+
+
+def make_session(cpus: str) -> SparkSession:
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("combblas-spark-bench")
@@ -313,7 +317,7 @@ def make_session(cpus: str) -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", f"{min(20 * 1024, mem_mb // 2)}m")
+        .config("spark.driver.memory", driver_memory(20))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

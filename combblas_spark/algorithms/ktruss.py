@@ -31,6 +31,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from combblas_spark.algorithms.triangles import _orient
 from combblas_spark.plans.superstep import SuperstepRunner
 
 
@@ -38,35 +39,21 @@ def _edge_support(e: DataFrame) -> DataFrame:
     """(src, dst, support) — number of triangles containing each canonical
     (src<dst) edge of ``e``. Edges in no triangle are ABSENT (support 0).
 
-    Enumeration is DEGREE-ORDERED (compact-forward, the same wedge bound as
-    algorithms/triangles._oriented): each edge is directed from its lower-
-    degree endpoint (ties by id) before the wedge join, so the apex of every
-    wedge is a low-degree vertex — per-apex wedge count is O(m^1.5) total on
-    any graph instead of |hub-degree|² around canonical-min hubs. Triple
-    sides are canonicalized back to (min, max) before counting, so the
-    output keys are orientation-independent."""
-    deg = (
-        e.select(F.col("src").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .count()
-    )
-    ds = deg.select(F.col("v").alias("src"), F.col("count").alias("d_src"))
-    dd = deg.select(F.col("v").alias("dst"), F.col("count").alias("d_dst"))
-    j = e.join(ds, "src").join(dd, "dst")
-    fwd = (F.col("d_src") < F.col("d_dst")) | (
-        (F.col("d_src") == F.col("d_dst")) & (F.col("src") < F.col("dst"))
-    )
-    d = j.select(
-        F.when(fwd, F.col("src")).otherwise(F.col("dst")).alias("u"),
-        F.when(fwd, F.col("dst")).otherwise(F.col("src")).alias("v"),
+    Enumeration is DEGREE-ORDERED (compact-forward): the materialized
+    orientation of algorithms/triangles._orient directs each edge from its
+    lower-degree endpoint (ties by id) before the wedge join, so the apex of
+    every wedge is a low-degree vertex — per-apex wedge count is O(m^1.5)
+    total on any graph instead of |hub-degree|² around canonical-min hubs.
+    The closing semi-join reads ``e`` itself, which is already canonical.
+    Triple sides are canonicalized back to (min, max) before counting, so
+    the output keys are orientation-independent."""
+    d = _orient(e, degree_ordered=True).select(
+        F.col("src").alias("u"), F.col("dst").alias("v")
     )
     e1 = d.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = d.select(F.col("u").alias("a"), F.col("v").alias("c"))
     wedges = e1.join(e2, on="a").filter(F.col("c") > F.col("b"))
-    closing = d.select(
-        F.least("u", "v").alias("b"), F.greatest("u", "v").alias("c")
-    )
+    closing = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     tri = wedges.join(closing, on=["b", "c"], how="leftsemi")
     sides = (
         tri.select(F.col("a").alias("x"), F.col("b").alias("y"))

@@ -5,10 +5,19 @@ Reference pattern: EWiseMult as the structural mask
 PSpGEMM (/root/reference/include/CombBLAS/ParFriends.h:1447); the
 lower-triangular trick ensures each triangle is counted exactly once.
 
-Scale note: the wedge join (L join L on dst==src) is the expensive stage;
-ordering by degree (directing each edge from lower- to higher-degree
-endpoint) bounds wedge counts on skewed graphs — provided via
-``degree_ordered=True``.
+Scale note: ordering by degree (directing each edge from its lower- to
+its higher-degree endpoint, ``degree_ordered=True``) bounds the wedge
+join (L join L on dst==src) on skewed graphs. ``L·L ⊙ L`` references
+``L`` three times, and the orientation references the canonical edge
+set three times (the degree table and its two joins), so a lazy plan
+re-derives the same small table in every branch: on a scale-11 R-MAT
+in a local[4] session the count ran 32 stages, against 11 over
+materialized operands. ``_oriented`` therefore cuts the lineage twice
+with an eager ``localCheckpoint``: after the canonical
+``(least, greatest).distinct()`` edge set (``_canonical``) and after the
+degree-ordered orientation (``_orient``). Every consumer (the product
+here, ``doulion_estimate``, ktruss's support count and clustering's
+``_tris``) then plans over flat leaves.
 """
 
 from __future__ import annotations
@@ -21,21 +30,27 @@ from combblas_spark.operators.multiply import spgemm
 from combblas_spark.operators.ewise import ewise_mult
 
 
-def _oriented(edges: DataFrame, degree_ordered: bool) -> DataFrame:
-    """One direction per undirected edge, unit weights, no loops."""
-    e = (
+def _canonical(edges: DataFrame) -> DataFrame:
+    """(src, dst) with src < dst: each undirected edge once, no loops;
+    materialized."""
+    return (
         edges.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("src"),
             F.greatest("src", "dst").alias("dst"),
         )
         .distinct()
-        .withColumn("w", F.lit(1).cast("long"))
+        .localCheckpoint()
     )
+
+
+def _orient(e: DataFrame, degree_ordered: bool) -> DataFrame:
+    """(src, dst, w=1) over the canonical edge set ``e``; with
+    ``degree_ordered`` each edge is directed from its lower-(degree, id)
+    endpoint — the classic wedge-count bound for skewed graphs — and the
+    result is materialized."""
     if not degree_ordered:
-        return e
-    # re-orient each edge from lower-degree to higher-degree endpoint
-    # (tie-break on id) — classic wedge-count bound for skewed graphs
+        return e.withColumn("w", F.lit(1).cast("long"))
     deg = (
         e.select(F.col("src").alias("v"))
         .unionByName(e.select(F.col("dst").alias("v")))
@@ -51,8 +66,13 @@ def _oriented(edges: DataFrame, degree_ordered: bool) -> DataFrame:
     return j.select(
         F.when(keep, F.col("src")).otherwise(F.col("dst")).alias("src"),
         F.when(keep, F.col("dst")).otherwise(F.col("src")).alias("dst"),
-        F.col("w"),
-    )
+        F.lit(1).cast("long").alias("w"),
+    ).localCheckpoint()
+
+
+def _oriented(edges: DataFrame, degree_ordered: bool) -> DataFrame:
+    """One direction per undirected edge, unit weights, no loops."""
+    return _orient(_canonical(edges), degree_ordered)
 
 
 def triangles_per_edge(edges: DataFrame, degree_ordered: bool = True) -> DataFrame:
@@ -99,33 +119,18 @@ def doulion_estimate(
     if p_permille <= 0 or 1000 % p_permille != 0:
         raise ValueError("p_permille must be a positive divisor of 1000")
     scale = (1000 // p_permille) ** 3
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
+    und = _canonical(edges)
     coin = md5_60bit(
         F.concat_ws(
-            "|", F.lit(salt), F.col("a").cast("string"),
-            F.col("b").cast("string"),
+            "|", F.lit(salt), F.col("src").cast("string"),
+            F.col("dst").cast("string"),
         )
     ) % 1000
     keep = und.filter(coin < F.lit(int(p_permille)))
-    def sym(u):  # symmetrize the canonical pairs with unit weights
-        return (
-            u.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .unionByName(
-                u.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-            )
-            .withColumn("w", F.lit(1.0))
-        )
-    n_s = triangles_per_edge(sym(keep)).agg(
+    n_s = triangles_per_edge(keep).agg(
         F.coalesce(F.sum("w"), F.lit(0)).cast("long").alias("n_tri_sampled")
     )
-    n_f = triangles_per_edge(sym(und)).agg(
+    n_f = triangles_per_edge(und).agg(
         F.coalesce(F.sum("w"), F.lit(0)).cast("long").alias("n_tri_exact")
     )
     n_e = keep.agg(F.count(F.lit(1)).cast("long").alias("n_edges_kept"))

@@ -8,14 +8,16 @@ Usage: python scripts/check_oracle.py [sf_dir] [only_query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import driver_memory  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -47,7 +49,7 @@ def main():
         .appName("oracle-check")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory(16))
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

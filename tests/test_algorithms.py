@@ -15,6 +15,7 @@ from combblas_spark.algorithms import (
     label_propagation,
     mcl,
 )
+from combblas_spark.algorithms.triangles import _oriented, triangles_per_edge
 from combblas_spark.operators.transform import symmetrize, remove_loops
 from combblas_spark.sources.fixtures import (
     sevenvertex,
@@ -120,6 +121,79 @@ def test_triangles(spark):
     # cross-check the golden itself on a small slice: triangles only
     tri_rows = [(s - 40_000, d - 40_000, w) for s, d, w in rows if 40_000 <= s < 50_000]
     assert triangle_count_dense(tri_rows, 150) == 50
+
+
+# wheel on hub 0 (rim 1..6, degree ties on the rim), a pendant 7 on rim
+# vertex 3, an all-ties triangle 10-11-12 given partly reversed, a loop and
+# a duplicate edge in both directions
+PER_EDGE_ROWS = (
+    [(0, v) for v in range(1, 7)]
+    + [(v, v % 6 + 1) for v in range(1, 7)]
+    + [(3, 7), (10, 11), (12, 11), (12, 10), (2, 2), (1, 2), (2, 1)]
+)
+
+
+def _oriented_py(rows, degree_ordered):
+    und = {(min(s, d), max(s, d)) for s, d in rows if s != d}
+    if not degree_ordered:
+        return und
+    deg = {}
+    for e in und:
+        for v in e:
+            deg[v] = deg.get(v, 0) + 1
+    return {(u, v) if (deg[u], u) < (deg[v], v) else (v, u) for u, v in und}
+
+
+def _per_edge_py(L):
+    """L·L ⊙ L: (i, k, #j with i->j->k) for every oriented edge i->k that
+    closes at least one wedge."""
+    succ = {}
+    for u, v in L:
+        succ.setdefault(u, set()).add(v)
+    out = set()
+    for i, k in L:
+        w = sum(1 for j in succ.get(i, ()) if k in succ.get(j, ()))
+        if w:
+            out.add((i, k, w))
+    return out
+
+
+@pytest.mark.parametrize("degree_ordered", [True, False])
+def test_triangles_per_edge_contract(spark, degree_ordered):
+    """Pins which oriented edge each triangle is credited to."""
+    edges = spark.createDataFrame(
+        [(s, d, 1.0) for s, d in PER_EDGE_ROWS], "src long, dst long, w double"
+    )
+    L = [tuple(r) for r in _oriented(edges, degree_ordered).collect()]
+    want_L = _oriented_py(PER_EDGE_ROWS, degree_ordered)
+    # each undirected edge exactly once, from its lower-(degree, id) endpoint
+    assert len(L) == len(want_L)
+    assert {(s, d) for s, d, _ in L} == want_L
+    assert {w for _, _, w in L} == {1}
+    got = {tuple(r) for r in triangles_per_edge(edges, degree_ordered).collect()}
+    want = _per_edge_py(want_L)
+    assert got == want
+    assert sum(w for _, _, w in want) == 7  # six wheel triangles + 10-11-12
+
+
+def test_triangle_count_job_budget(spark):
+    """The degree-ordered count over a cached graph (the way kernels see
+    their input) materializes the canonical edge set and its orientation
+    once each, so the masked product plans over flat leaves: at most 12
+    Spark jobs. Re-deriving both in every plan branch took 32."""
+    edges, golden = chain_star_forest(spark)
+    g = edges.persist()
+    g.count()
+    sc = spark.sparkContext
+    group = "test-triangle-count-job-budget"
+    sc.setJobGroup(group, "triangle_count job budget")
+    try:
+        assert triangle_count(g) == golden["triangles"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        g.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 12, len(jobs)
 
 
 def test_label_propagation_cliques(spark):
