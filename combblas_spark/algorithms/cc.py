@@ -342,11 +342,11 @@ def cc_trace(
 ) -> DataFrame:
     """Per-superstep convergence metrics of min-label CC as a DataFrame:
     (iter, n_changed, n_labels) — the iteration-metrics surface the
-    SuperstepRunner writes into manifests (superstep.py:104's
-    ``metrics``), exposed as a queryable table so convergence dashboards
-    and resume decisions are driver-graded data, not log lines. Both
-    metrics are exact integers (n_changed = labels that moved this
-    superstep, n_labels = distinct labels remaining — a monotone upper
+    SuperstepRunner writes into manifests (``SuperstepRunner.save``'s
+    manifest ``metrics``), exposed as a queryable table so convergence
+    dashboards and resume decisions are driver-graded data, not log
+    lines. Both metrics are exact integers (n_changed = labels that moved
+    this superstep, n_labels = distinct labels remaining — a monotone upper
     bound on components).
 
     Same plan per superstep as cc_minlabel (one SpMV<Select2ndMin> plus

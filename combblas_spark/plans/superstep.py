@@ -5,7 +5,8 @@ The reference keeps all iteration state in memory (BFS loop
 /root/reference/Applications/CC.h:1404-1544) and has NO checkpoint/restart.
 Checkpointing is OUR addition (north_rule): every superstep can persist its
 state DataFrames to Parquet together with a manifest recording the
-iteration number, metrics and per-partition row counts (lineage evidence),
+iteration number, metrics and per-file row counts read from the Parquet
+footers, keyed by write task (lineage evidence, checked again on resume),
 so a converged-to-iteration-k job resumes from k.
 
 Two lineage concerns at scale:
@@ -23,8 +24,9 @@ import os
 import time
 from typing import Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
 
 
 class SuperstepRunner:
@@ -140,8 +142,11 @@ class SuperstepRunner:
     def save(self, iteration: int, states: dict, metrics: dict) -> None:
         """Persist state DataFrames + manifest for ``iteration``.
 
-        ``states``: name -> DataFrame. The manifest records per-partition row
-        counts per state (partition lineage) and caller metrics.
+        ``states``: name -> DataFrame. Each state costs ONE Spark job, its
+        Parquet write. The manifest records caller metrics and, per state,
+        the row count of every part file the write committed, read from the
+        Parquet footers on the driver and keyed by write task (partition
+        lineage); nothing re-scans what was just written.
         """
         if self.dir is None or iteration % self.every:
             return
@@ -150,16 +155,11 @@ class SuperstepRunner:
         for name, df in states.items():
             path = os.path.join(d, name)
             df.write.mode("overwrite").parquet(path)
-            parts = (
-                self.spark.read.parquet(path)
-                .groupBy(F.spark_partition_id().alias("pid"))
-                .count()
-                .collect()
-            )
+            parts = _footer_counts(path)
             lineage[name] = {
                 "path": path,
-                "partitions": {int(r["pid"]): int(r["count"]) for r in parts},
-                "rows": int(sum(r["count"] for r in parts)),
+                "partitions": parts,
+                "rows": sum(parts.values()),
             }
         manifest = {
             "iteration": iteration,
@@ -173,24 +173,56 @@ class SuperstepRunner:
         os.replace(tmp, os.path.join(d, "manifest.json"))
 
     def latest(self) -> Optional[dict]:
-        """Most recent complete manifest, or None."""
+        """Most recent complete manifest, or None. Only that one is read:
+        ``iter=*`` dirs are walked newest first, and a dir without a
+        ``manifest.json`` (a save cut short) is skipped."""
         if self.dir is None or not os.path.isdir(self.dir):
             return None
-        best = None
-        for name in sorted(os.listdir(self.dir)):
+        for name in sorted(os.listdir(self.dir), reverse=True):
             mf = os.path.join(self.dir, name, "manifest.json")
             if os.path.exists(mf):
                 with open(mf) as f:
-                    best = json.load(f)
-        return best
+                    return json.load(f)
+        return None
 
     def resume(self) -> Optional[tuple[int, dict, dict]]:
-        """(iteration, {name: DataFrame}, metrics) from the latest manifest."""
+        """(iteration, {name: DataFrame}, metrics) from the latest manifest.
+
+        Each state's part files are checked against the manifest's
+        ``partitions`` first, from their footers and with no Spark job; a
+        state whose files were lost or changed since the save raises
+        ``ValueError``."""
         m = self.latest()
         if m is None:
             return None
+        for name, info in m["states"].items():
+            want = {int(k): v for k, v in info["partitions"].items()}
+            try:
+                have = _footer_counts(info["path"])
+            except (OSError, pa.ArrowException) as exc:
+                raise ValueError(
+                    f"checkpoint state {name!r} at {info['path']} is unreadable: {exc}"
+                ) from exc
+            if have != want:
+                raise ValueError(
+                    f"checkpoint state {name!r} at {info['path']} does not match "
+                    f"its manifest: part-file rows by task {have}, manifest {want}"
+                )
         states = {
             name: self.spark.read.parquet(info["path"])
             for name, info in m["states"].items()
         }
         return m["iteration"], states, m.get("metrics", {})
+
+
+def _footer_counts(path: str) -> dict:
+    """Write task id -> rows over the ``part-NNNNN-*.parquet`` files under
+    ``path``, read from the Parquet footers. A task whose output was split
+    by ``maxRecordsPerFile`` (``c000``, ``c001``, ...) is summed."""
+    counts: dict = {}
+    for f in os.listdir(path):
+        if f.startswith("part-") and f.endswith(".parquet"):
+            task = int(f.split("-")[1])
+            rows = pq.read_metadata(os.path.join(path, f)).num_rows
+            counts[task] = counts.get(task, 0) + rows
+    return counts

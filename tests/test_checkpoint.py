@@ -79,5 +79,87 @@ def test_manifest_contents(spark, tmp_path):
         m = json.load(f)
     assert m["iteration"] == 2
     assert "ranks" in m["states"]
-    assert m["states"]["ranks"]["rows"] == 64
-    assert sum(m["states"]["ranks"]["partitions"].values()) == 64
+    ranks = m["states"]["ranks"]
+    assert ranks["rows"] == 64
+    assert sum(ranks["partitions"].values()) == 64
+    # keyed by the write task id of each part-NNNNN file on disk
+    tasks = {int(f.split("-")[1]) for f in os.listdir(ranks["path"])
+             if f.startswith("part-") and f.endswith(".parquet")}
+    assert {int(k) for k in ranks["partitions"]} == tasks
+
+
+def test_save_is_one_job(spark, tmp_path):
+    """A checkpoint save costs one Spark job per state, its Parquet write:
+    the manifest's row counts come from the footers, not from a read-back
+    scan of what was just written (that scan took 3 more jobs)."""
+    df = spark.range(0, 200, numPartitions=4).selectExpr("id", "id * 2 AS v").persist()
+    df.count()
+    r = SuperstepRunner(spark, checkpoint_dir=str(tmp_path / "j"), every=1)
+    sc = spark.sparkContext
+    group = "test-save-is-one-job"
+    sc.setJobGroup(group, "checkpoint save job budget")
+    try:
+        r.save(1, {"s": df}, {})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        df.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, len(jobs)
+    assert r.latest()["states"]["s"]["rows"] == 200
+
+
+def test_empty_state_roundtrip(spark, tmp_path):
+    schema = "id long, rank double"
+    r = SuperstepRunner(spark, checkpoint_dir=str(tmp_path / "e"), every=1)
+    r.save(1, {"s": spark.createDataFrame([], schema)}, {"n": 0})
+    assert r.latest()["states"]["s"]["rows"] == 0
+    it, states, metrics = r.resume()
+    assert (it, metrics) == (1, {"n": 0})
+    assert states["s"].count() == 0
+    assert states["s"].schema == spark.createDataFrame([], schema).schema
+
+
+def test_latest_skips_torn_checkpoint(spark, tmp_path):
+    """A save cut short leaves state files but no manifest.json; the newest
+    COMPLETE checkpoint is the one resumed."""
+    df = spark.range(8).selectExpr("id", "CAST(id AS DOUBLE) AS rank")
+    ckpt = str(tmp_path / "t")
+    r = SuperstepRunner(spark, checkpoint_dir=ckpt, every=1)
+    r.save(1, {"s": df}, {})
+    r.save(2, {"s": df}, {})
+    df.write.parquet(os.path.join(ckpt, "iter=000003", "s"))
+    assert r.latest()["iteration"] == 2
+    assert r.resume()[0] == 2
+
+
+def test_manifest_sums_split_task_files(spark, tmp_path):
+    """maxRecordsPerFile splits one write task's output into c000, c001, ...;
+    the manifest keys rows by task, so the split files are summed."""
+    df = spark.range(0, 200, numPartitions=4).selectExpr("id", "id * 2 AS v")
+    r = SuperstepRunner(spark, checkpoint_dir=str(tmp_path / "x"), every=1)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "20")
+    try:
+        r.save(1, {"s": df}, {})
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    info = r.latest()["states"]["s"]
+    assert len([f for f in os.listdir(info["path"]) if f.startswith("part-")]) == 12
+    assert info["partitions"] == {"0": 50, "1": 50, "2": 50, "3": 50}
+    assert r.resume()[1]["s"].count() == 200
+
+
+@pytest.mark.parametrize("damage", ["delete", "truncate"])
+def test_resume_rejects_damaged_part_file(spark, tmp_path, damage):
+    edges = weighted_digraph(spark, n=64, avg_deg=4, seed=5)
+    ckpt = str(tmp_path / "d")
+    r1 = SuperstepRunner(spark, checkpoint_dir=ckpt, every=1)
+    pagerank(spark, edges, num_iters=2, runner=r1)
+    ranks = os.path.join(ckpt, "iter=000002", "ranks")
+    part = os.path.join(ranks, sorted(f for f in os.listdir(ranks) if f.startswith("part-"))[0])
+    if damage == "delete":
+        os.remove(part)
+    else:
+        os.truncate(part, os.path.getsize(part) // 2)
+    r2 = SuperstepRunner(spark, checkpoint_dir=ckpt, every=1)
+    with pytest.raises(ValueError, match="ranks"):
+        r2.resume()
