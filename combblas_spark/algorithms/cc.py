@@ -98,14 +98,11 @@ def cc_minlabel(
         if resumed is not None:
             start, states, _ = resumed
             labels = states["labels"]
-        labels = runner.truncate(labels)
         # labels are O(V) rows every superstep — gate the forced broadcast
-        # once on |V| (past the gate AQE decides; 'grid' broadcasts nothing)
-        bb = (
-            broadcast_vectors
-            and grid is None
-            and labels.count() <= BROADCAST_MAX_ROWS
-        )
+        # once on |V|, counted inside the first cut's job (past the gate
+        # AQE decides; 'grid' broadcasts nothing)
+        labels, row = runner.truncate_agg(labels, F.count(F.lit(1)).alias("n"))
+        bb = broadcast_vectors and grid is None and row["n"] <= BROADCAST_MAX_ROWS
 
         for it in range(start, max_iter):
             if grid is not None:

@@ -81,13 +81,9 @@ def label_propagation(
         # Exchange-free
         verts = edges.select(F.col("dst").alias("id")).distinct()
         labels = verts.select("id", F.col("id").alias("val"))
-        labels = runner.truncate(labels)
-        # count last: the job only runs when the gate can actually pass
-        bb = (
-            broadcast_vectors
-            and grid is None
-            and labels.count() <= BROADCAST_MAX_ROWS
-        )
+        # the broadcast gate's |V| is counted inside the first cut's job
+        labels, row = runner.truncate_agg(labels, F.count(F.lit(1)).alias("n"))
+        bb = broadcast_vectors and grid is None and row["n"] <= BROADCAST_MAX_ROWS
 
         for it in range(num_iters):
             if grid is not None:

@@ -13,9 +13,13 @@ Scale notes:
 * E_norm is computed ONCE and cached; every iteration is a single
   shuffle (join on src + agg on dst). The ranks vector is tiny relative
   to edges — AQE broadcast-joins it under the threshold.
-* dangling mass needs a per-iteration scalar; we fold it into the same
-  pass by keeping the dangling-vertex set precomputed (an anti-join done
-  once, not per iteration).
+* set-up is ONE table, deg(id, deg) = the weighted out-degree over every
+  vertex, null for a dangling one (no out-edge), cut once with the
+  vertex and dangling counts folded into its checkpoint job; the vertex
+  set, the dangling set, the initial ranks and E_norm's divisor are all
+  projections of it.
+* dangling mass needs a per-iteration scalar, summed over the dangling
+  projection of that cut (skipped entirely when there is none).
 * lineage is truncated per iteration (localCheckpoint) — without it the
   plan tree grows linearly and analysis time dominates by iteration ~30.
 """
@@ -85,31 +89,39 @@ def pagerank(
     ``num_iters`` set -> run exactly that many iterations with no
     convergence action per step (oracle-parity / benchmark mode);
     otherwise iterate until L-inf delta < tol, checking every
-    ``check_every`` iterations (each check is an extra join+action —
-    amortize it on long runs).
+    ``check_every`` iterations. A check folds max |delta| into the
+    superstep's own checkpoint job (``runner.truncate_agg``), so it runs
+    no extra Spark job.
     ``runner`` enables per-superstep durable checkpointing + resume.
     """
     runner = runner or SuperstepRunner(spark)
-    verts = (vertices or _vertices(edges)).select("id")
-    verts.persist()
-    try:
-        return _pagerank_loop(
-            spark, edges, verts, alpha, tol, max_iter, num_iters, runner,
-            broadcast_vectors, check_every, mode, grid_shape, seeds,
-            init_ranks,
+    # ONE table carries the vertex set, the weighted out-degree and the
+    # dangling mark (a null deg: no out-edge), cut once with both counts
+    # folded into its checkpoint job; every other set-up frame is a
+    # projection of it
+    if vertices is None:
+        no_w = F.lit(None).cast(edges.schema["w"].dataType)
+        deg = (
+            edges.select(F.col("src").alias("id"), "w")
+            .unionByName(edges.select(F.col("dst").alias("id"), no_w.alias("w")))
+            .groupBy("id")
+            .agg(F.sum("w").alias("deg"))
         )
-    finally:
-        verts.unpersist()
+    else:
+        outdeg = reduce_dim(edges, "row", F.sum)  # weighted out-degree
+        deg = vertices.select("id").join(
+            outdeg.select("id", F.col("val").alias("deg")), on="id", how="left"
+        )
+    deg, row = runner.truncate_agg(
+        deg,
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("deg").isNull(), 1)).alias("n_dangling"),
+    )
+    n = row["n"]
+    # ranks are exactly n rows every superstep — gate the forced broadcast
+    # on it once (past the gate AQE decides; 'grid' mode broadcasts nothing)
+    bb = broadcast_vectors and mode != "grid" and n <= BROADCAST_MAX_ROWS
 
-
-def _pagerank_loop(
-    spark, edges, verts, alpha, tol, max_iter, num_iters, runner,
-    broadcast_vectors, check_every, mode, grid_shape, seeds=None,
-    init_ranks=None,
-):
-    n = verts.count()
-
-    outdeg = reduce_dim(edges, "row", F.sum)  # weighted out-degree
     # normalize + lay the edges out ONCE; every superstep then moves only
     # the (vertex-sized) rank vector — the edge table never re-shuffles.
     # Two vector-exchange regimes (see plans/grid.py):
@@ -118,41 +130,35 @@ def _pagerank_loop(
     #   while the vector is broadcast-sized; the build is driver-serial.
     # * 'grid': 2D band grid + replicate-by-shuffle — all per-superstep
     #   movement is parallel; the scale path for O(V)-row vectors.
-    e_norm = dimapply(edges, outdeg, dim="row", binop=lambda w, d: w / d)
     grid = None
     if mode == "grid":
         shape = grid_shape or auto_grid_shape(spark, edges.count())
         grid = Grid2D(spark, *shape)
+    inv = deg.select("id", F.col("deg").alias("val"))
+    if bb:
+        inv = F.broadcast(inv)
+    e_norm = dimapply(edges, inv, dim="row", binop=lambda w, d: w / d)
+    if grid is not None:
         e_norm = grid.partition_edges(e_norm).persist()
     else:
         e_norm = partition_by_key(e_norm, "dst").persist()
     e_norm.count()
-
-    dangling = verts.join(
-        edges.select(F.col("src").alias("id")).distinct(), on="id", how="left_anti"
-    )
-    dangling.persist()
     try:
         return _pagerank_iters(
-            spark, e_norm, verts, dangling, grid, n, alpha, tol, max_iter,
-            num_iters, runner, broadcast_vectors, check_every, seeds,
-            init_ranks,
+            spark, e_norm, deg, grid, n, row["n_dangling"], bb, alpha, tol,
+            max_iter, num_iters, runner, check_every, seeds, init_ranks,
         )
     finally:
         e_norm.unpersist()
-        dangling.unpersist()
 
 
 def _pagerank_iters(
-    spark, e_norm, verts, dangling, grid, n, alpha, tol, max_iter,
-    num_iters, runner, broadcast_vectors, check_every, seeds=None,
-    init_ranks=None,
+    spark, e_norm, deg, grid, n, n_dangling, bb, alpha, tol, max_iter,
+    num_iters, runner, check_every, seeds, init_ranks,
 ):
-    n_dangling = dangling.count()  # symmetric graphs have none -> skip the
-    # per-iteration dangling-mass action entirely
-    # ranks are exactly n rows every superstep — gate the forced broadcast
-    # on it once (past the gate AQE decides; 'grid' mode broadcasts nothing)
-    bb = broadcast_vectors and n <= BROADCAST_MAX_ROWS
+    dangling = deg.filter(F.col("deg").isNull()).select("id")
+    if bb:
+        dangling = F.broadcast(dangling)
 
     # personalized restart vector p: uniform over seeds, else uniform over
     # all vertices. A Column expression — no extra join anywhere in the loop.
@@ -167,23 +173,22 @@ def _pagerank_iters(
     if init_ranks is not None:
         # warm start: carry the prior vector, fill vertices it has never
         # seen with 1/n, renormalize so the iteration stays on the simplex
-        carried = verts.join(init_ranks, on="id", how="left").select(
+        carried = deg.select("id").join(init_ranks, on="id", how="left").select(
             "id", F.coalesce(F.col("val"), F.lit(1.0 / n)).alias("val")
         )
         total = carried.agg(F.sum("val")).collect()[0][0] or 1.0
         ranks = carried.select("id", (F.col("val") / F.lit(total)).alias("val"))
     else:
-        ranks = verts.select("id", p_col.alias("val"))
+        ranks = deg.select("id", p_col.alias("val"))
     resumed = runner.resume() if runner.dir else None
     if resumed is not None:
         start_iter, states, _ = resumed
         ranks = states["ranks"]
-    ranks = runner.truncate(ranks)
 
     iters = num_iters if num_iters is not None else max_iter
     for it in range(start_iter, iters):
         dang_mass = 0.0
-        if n_dangling:
+        if n_dangling:  # symmetric graphs have none -> no per-iteration action
             dang_mass = (
                 dangling.join(ranks, on="id", how="inner").agg(F.sum("val")).collect()[0][0]
                 or 0.0
@@ -244,7 +249,7 @@ def _pagerank_iters(
             ranks = runner.truncate_lazy(new_ranks.select("id", "val"))
             runner.save(it + 1, {"ranks": ranks}, {"n": n})
     if num_iters is not None:
-        ranks.count()  # materialize while e_norm/dangling are still cached
+        ranks.count()  # materialize while e_norm is still cached
     return ranks
 
 

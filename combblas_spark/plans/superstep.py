@@ -26,7 +26,7 @@ from typing import Optional
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 
 
 class SuperstepRunner:
@@ -93,19 +93,27 @@ class SuperstepRunner:
 
     def truncate_agg(self, df: DataFrame, *aggs):
         """Cut the lineage of ``df`` AND evaluate ``aggs`` over it in ONE
-        Spark action: the localCheckpoint is taken lazily, so the first
-        action — the aggregate collect here — both materializes the
-        checkpointed partitions and folds them, where ``truncate(df)``
-        followed by a separate convergence aggregate costs two passes /
-        two jobs per superstep. Returns ``(truncated_df, agg_row)``.
+        Spark job: ``aggs`` are attached to ``df`` with ``observe``, so
+        Spark's CollectMetrics node folds them while the eager checkpoint
+        materializes the partitions. A global ``agg().collect()`` over the
+        cut would add two jobs under AQE (the single-partition exchange and
+        the result), and ``truncate(df)`` followed by a separate aggregate
+        a whole second pass. Returns ``(truncated_df, agg_row)``; the row's
+        fields follow the order of ``aggs``, and over an empty frame they
+        are what ``agg`` gives (count 0, null sum and max).
+
+        Each partition's metrics are counted once: CollectMetrics is the
+        root of the checkpointed plan, so it runs in the checkpoint
+        action's result stage, whose accumulator updates Spark applies
+        once per partition even when a task is retried.
 
         This is the per-superstep convergence-check shape: fold the
         changed-count (or any scalar metric) into the materializing job
         instead of re-joining old and new state afterwards.
         """
-        out = self._cut(df, eager=False)
-        row = out.agg(*aggs).collect()[0]
-        return out, row
+        obs = Observation()
+        out = self._cut(df.observe(obs, *aggs), eager=True)
+        return out, Row(**obs.get)
 
     def _cut(self, df: DataFrame, eager: bool) -> DataFrame:
         cp = df.localCheckpoint(eager=eager)

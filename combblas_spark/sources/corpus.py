@@ -58,13 +58,15 @@ def synth_repo_files(
 
 def build_vertices(files: DataFrame, dense: bool = True) -> DataFrame:
     """-> vertices(id, key, sha). key = repo/path; sha = sha2(content, 256).
+    A null repo or path gives a null key (SQL ``||``), which no other
+    file's key can equal; such rows sort last and join no edge.
 
     dense=True: ids 0..n-1 by row_number over sorted key (oracle-replayable).
     dense=False: collision-checked xxhash64 ids (the 10^12-row path; caller
     should assert `assert_no_id_collisions` once per ingest).
     """
     base = files.select(
-        F.concat_ws("/", F.col("repo"), F.col("path")).alias("key"),
+        F.concat(F.col("repo"), F.lit("/"), F.col("path")).alias("key"),
         F.sha2(F.col("content"), 256).alias("sha"),
     )
     if dense:
@@ -72,7 +74,7 @@ def build_vertices(files: DataFrame, dense: bool = True) -> DataFrame:
         # still only for oracle-scale ingests — at 10^12 rows use dense=False
         from combblas_spark.operators.indexing import _global_ranks
 
-        ranked = _global_ranks(base, [F.col("key").asc()])
+        ranked = _global_ranks(base, [F.col("key").asc_nulls_last()])
         return ranked.select(F.col("rank").alias("id"), "key", "sha")
     return base.select(F.xxhash64("key").alias("id"), "key", "sha")
 
@@ -100,7 +102,7 @@ def build_edges_cooccurrence(
     north_rule requires.
     """
     fv = files.select(
-        F.concat_ws("/", F.col("repo"), F.col("path")).alias("key"), F.col("repo")
+        F.concat(F.col("repo"), F.lit("/"), F.col("path")).alias("key"), F.col("repo")
     ).join(vertices.select("id", "key"), on="key")
     sizes = fv.groupBy("repo").agg(F.count(F.lit(1)).alias("n_files"))
     fv = fv.join(sizes, on="repo").localCheckpoint()

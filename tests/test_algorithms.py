@@ -48,6 +48,33 @@ def test_pagerank_vs_numpy(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
+def _dangling_digraph(spark):
+    """Directed graph with dangling vertices (FIXTURES.md F5), plus vertex
+    64, which no edge touches, passed through ``vertices=``."""
+    edges = weighted_digraph(spark, n=64, avg_deg=4, seed=13)
+    n = 65
+    a = edges_to_dense([(r["src"], r["dst"], r["w"]) for r in edges.collect()], n)
+    assert (a.sum(axis=1) == 0).sum() >= 2 and not a[:, 64].any()
+    return edges, spark.range(n).select("id"), a
+
+
+@pytest.mark.parametrize("kind", ["tolerance", "num_iters", "seeds"])
+def test_pagerank_dangling_and_isolated_vs_numpy(spark, kind):
+    edges, verts, a = _dangling_digraph(spark)
+    if kind == "num_iters":
+        got = pagerank(spark, edges, num_iters=7, vertices=verts)
+        want, tol = pagerank_dense(a, iters=7), 1e-12
+    else:
+        seeds = [3, 17] if kind == "seeds" else None
+        got = pagerank(spark, edges, tol=1e-9, vertices=verts, seeds=seeds)
+        want, tol = pagerank_dense(a, iters=200, seeds=seeds), 1e-8
+    got = collect_vec(got)
+    assert sorted(got) == list(range(65))
+    for i in range(65):
+        assert got[i] == pytest.approx(want[i], abs=tol)
+    assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
+
+
 def test_cc_small(spark):
     sym = symmetrize(sevenvertex(spark))
     labels = collect_vec(cc_minlabel(spark, sym))
@@ -194,6 +221,55 @@ def test_triangle_count_job_budget(spark):
         g.unpersist()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 12, len(jobs)
+
+
+def _jobs_per_call(spark, group, fn, calls=2):
+    """Spark jobs of each of ``calls`` runs of ``fn``, one job group each."""
+    sc = spark.sparkContext
+    counts = []
+    for i in range(calls):
+        sc.setJobGroup(f"{group}-{i}", group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(f"{group}-{i}")))
+    return counts
+
+
+def test_pagerank_job_budget(spark):
+    """PageRank to tolerance over a cached symmetric graph: set-up is one
+    cut of the degree table (vertex and dangling counts folded into its
+    job) plus the normalized edge layout, and each superstep folds its
+    delta into its checkpoint job: at most 48 jobs, the same in every call
+    (48 measured). Separate vertex, degree and dangling counts and an
+    agg().collect() per superstep took 69."""
+    g = symmetrize(weighted_digraph(spark, n=128, avg_deg=4, seed=3)).persist()
+    g.count()
+    try:
+        counts = _jobs_per_call(
+            spark, "test-pagerank-job-budget", lambda: pagerank(spark, g, tol=1e-6)
+        )
+    finally:
+        g.unpersist()
+    assert counts[0] == counts[1] <= 48, counts
+
+
+def test_cc_minlabel_job_budget(spark):
+    """Min-label CC over a cached symmetric graph: the first cut counts |V|
+    for the broadcast gate inside its own job, and each superstep folds its
+    moved count into its checkpoint job: at most 18 jobs, the same in
+    every call (18 measured). A separate count and an agg().collect() per
+    superstep took 25."""
+    g = symmetrize(weighted_digraph(spark, n=128, avg_deg=4, seed=3)).persist()
+    g.count()
+    try:
+        counts = _jobs_per_call(
+            spark, "test-cc-minlabel-job-budget", lambda: cc_minlabel(spark, g)
+        )
+    finally:
+        g.unpersist()
+    assert counts[0] == counts[1] <= 18, counts
 
 
 def test_label_propagation_cliques(spark):

@@ -5,6 +5,7 @@ import json
 import os
 
 import pytest
+import pyspark.sql.functions as F
 
 from combblas_spark.algorithms.pagerank import pagerank
 from combblas_spark.algorithms.bfs import bfs
@@ -36,6 +37,27 @@ def test_pagerank_resume_equals_uninterrupted(spark, tmp_path):
     assert set(full) == set(resumed)
     for k in full:
         assert resumed[k] == pytest.approx(full[k], abs=1e-12)
+
+
+def test_pagerank_tolerance_resume_equals_uninterrupted(spark, tmp_path):
+    """Tolerance mode: resumed after superstep 3, the run stops at the same
+    superstep as an uninterrupted one, with the same ranks."""
+    edges = weighted_digraph(spark, n=128, avg_deg=5, seed=11)
+    r0 = SuperstepRunner(spark, checkpoint_dir=str(tmp_path / "full"), every=1)
+    full = collect_vec(pagerank(spark, edges, tol=1e-8, runner=r0))
+    k = r0.latest()["iteration"]
+    assert k > 3
+
+    ckpt = str(tmp_path / "pr")
+    r1 = SuperstepRunner(spark, checkpoint_dir=ckpt, every=1)
+    pagerank(spark, edges, tol=1e-8, max_iter=3, runner=r1)
+    assert r1.latest()["iteration"] == 3
+    r2 = SuperstepRunner(spark, checkpoint_dir=ckpt, every=1)
+    resumed = collect_vec(pagerank(spark, edges, tol=1e-8, runner=r2))
+    assert r2.latest()["iteration"] == k
+    assert set(full) == set(resumed)
+    for v in full:
+        assert resumed[v] == pytest.approx(full[v], abs=1e-12)
 
 
 @pytest.mark.parametrize("cc", [cc_minlabel, cc_fastsv], ids=lambda f: f.__name__)
@@ -163,3 +185,63 @@ def test_resume_rejects_damaged_part_file(spark, tmp_path, damage):
     r2 = SuperstepRunner(spark, checkpoint_dir=ckpt, every=1)
     with pytest.raises(ValueError, match="ranks"):
         r2.resume()
+
+
+def _agg_frames(spark):
+    base = spark.range(0, 100, numPartitions=4).selectExpr("id", "id % 7 AS v")
+    return {
+        "non_empty": base,
+        "filtered_to_empty": base.filter("id < 0"),
+        "zero_partitions": spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), base.schema
+        ),
+    }
+
+
+def _aggs():
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.sum("v").alias("s"),
+        F.max("v").alias("m"),
+        F.count(F.when(F.col("v") == 0, 1)).alias("z"),
+    ]
+
+
+@pytest.mark.parametrize("frame", ["non_empty", "filtered_to_empty", "zero_partitions"])
+def test_truncate_agg_equals_agg(spark, frame):
+    """The scalars folded into the cut's job are exactly what a global
+    ``agg`` gives, also over an empty frame (count 0, null sum and max)."""
+    df = _agg_frames(spark)[frame]
+    out, row = SuperstepRunner(spark).truncate_agg(df, *_aggs())
+    assert row == df.agg(*_aggs()).collect()[0]
+    assert sorted(out.collect()) == sorted(df.collect())
+
+
+def test_truncate_agg_row_follows_agg_order(spark):
+    df = spark.range(10).selectExpr("id", "id * 2 AS v")
+    _, row = SuperstepRunner(spark).truncate_agg(
+        df, F.max("v").alias("z"), F.count(F.lit(1)).alias("a"), F.sum("v").alias("m")
+    )
+    assert row.__fields__ == ["z", "a", "m"]
+    assert tuple(row) == (18, 10, 90)
+
+
+def test_truncate_agg_is_one_job(spark):
+    """Cutting a persisted frame and folding its scalars runs ONE Spark job,
+    the checkpoint's. A global agg().collect() over a lazy cut ran 2: the
+    single-partition exchange, which also materialized the cut, and the
+    result."""
+    df = spark.range(0, 200, numPartitions=4).selectExpr("id", "id % 7 AS v").persist()
+    df.count()
+    sc = spark.sparkContext
+    group = "test-truncate-agg-is-one-job"
+    sc.setJobGroup(group, "truncate_agg job budget")
+    try:
+        _, row = SuperstepRunner(spark).truncate_agg(
+            df, F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        df.unpersist()
+    assert tuple(row) == (200, 594)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

@@ -162,3 +162,21 @@ def test_cooccurrence_empty_and_single_file_repos(spark):
         edges = build_edges_cooccurrence(files, build_vertices(files, dense=True))
         assert edges.columns == ["src", "dst", "w"]
         assert edges.count() == 0
+
+
+def test_null_repo_key_does_not_collide(spark):
+    """A null repo gives a null key (as SQL ``source || '/' || path`` does),
+    not ``path`` alone: the null-repo ``a/x.py`` must not merge with repo
+    ``a``'s ``x.py``. The null key sorts last and joins no edge."""
+    files = spark.createDataFrame(
+        [("a", "x.py", "c", "py", "1"), ("a", "y.py", "c", "py", "2"),
+         (None, "a/x.py", "c", "py", "3")],
+        FILES_SCHEMA,
+    )
+    verts = build_vertices(files, dense=True)
+    got = sorted((r["id"], r["key"]) for r in verts.collect())
+    assert got == [(0, "a/x.py"), (1, "a/y.py"), (2, None)]
+    edges = build_edges_cooccurrence(files, verts).collect()
+    assert sorted((r["src"], r["dst"], r["w"]) for r in edges) == [
+        (0, 1, 1.0), (1, 0, 1.0)
+    ]

@@ -42,17 +42,26 @@ def union_find_components(edges, vertices):
     return {v: find(v) for v in vertices}
 
 
-def pagerank_dense(a: np.ndarray, alpha: float = 0.85, iters: int = 200) -> np.ndarray:
-    """Power iteration with dangling redistribution; a[src, dst] weights."""
+def pagerank_dense(
+    a: np.ndarray, alpha: float = 0.85, iters: int = 200, seeds=None
+) -> np.ndarray:
+    """Power iteration with dangling redistribution; a[src, dst] weights.
+    Restart and dangling mass go to p, uniform over ``seeds`` (personalized)
+    or over every vertex; the iteration starts at p."""
     n = a.shape[0]
     out = a.sum(axis=1)
     p = np.zeros_like(a)
     nz = out > 0
     p[nz] = a[nz] / out[nz, None]
-    x = np.full(n, 1.0 / n)
+    if seeds is None:
+        restart = np.full(n, 1.0 / n)
+    else:
+        restart = np.zeros(n)
+        restart[list(seeds)] = 1.0 / len(seeds)
+    x = restart.copy()
     for _ in range(iters):
         dang = x[~nz].sum()
-        x = (1 - alpha) / n + alpha * (p.T @ x + dang / n)
+        x = (1 - alpha) * restart + alpha * (p.T @ x + dang * restart)
     return x
 
 
