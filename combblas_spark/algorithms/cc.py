@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from combblas_spark.core.semiring import SELECT2ND_MIN
-from combblas_spark.core.tuning import BROADCAST_MAX_ROWS, partition_by_key
+from combblas_spark.core.tuning import BROADCAST_MAX_ROWS, self_row_layout
 from combblas_spark.operators.multiply import spmv
 from combblas_spark.operators.ewise import ewise_apply_vec
 from combblas_spark.operators.indexing import vec_gather, vec_assign
@@ -59,14 +59,20 @@ def cc_minlabel(
 ) -> DataFrame:
     """(id, val) with val = min vertex id in the component (canonical).
 
-    Superstep = SpMV<Select2ndMin> over A, then ONE left join folding the
-    min-neighbor label into the old vector — new = least(old, mn) — with a
-    ``moved`` flag computed inline, so convergence costs NO separate
-    old-vs-new join: ``truncate_agg`` materializes the checkpoint AND sums
-    the flag in a single action per superstep (plans/superstep.py). The
-    label a vertex keeps when no neighbor improves it plays the role the
-    A + I diagonal (AddLoops, SpParMat.cpp:3290) played in the previous
-    formulation; the fixpoint is identical.
+    Superstep = SpMV<Select2ndMin> over A + I: the cached layout carries
+    one self row (v, v) per vertex (AddLoops, SpParMat.cpp:3290), so
+    new[v] = min(x) over v's neighbors AND v itself, the old least(old, mn)
+    fold. The self row also gives the aggregate v's OLD label,
+    ``_old = min(x where src == dst)``, so the ``moved`` flag
+    (new < old) is computed in the same aggregate, and ``truncate_agg``
+    sums it inside the checkpoint job (plans/superstep.py). A superstep is
+    one vector broadcast and one Exchange-free aggregate over the cache.
+
+    Round 6 dropped A + I for a left join of the neighbor minimum onto the
+    old vector, because the diagonal alone gave no old value, and
+    convergence then needed a separate old-versus-new join. Here the old
+    value rides in the same aggregate, which removes both that join and
+    the broadcast of the neighbor minima back to every task.
     Convergence (changed == 0) is checked every ``check_every`` supersteps.
     ``mode='grid'`` uses the 2D band-grid vector exchange (plans/grid.py)
     instead of a label-vector broadcast — the O(V)-row-vector scale path.
@@ -80,7 +86,11 @@ def cc_minlabel(
         # select2nd ignores w — drop it from the cached layout
         e = grid.partition_edges(e, with_w=False)
     else:
-        e = partition_by_key(e, "dst")
+        own = (
+            vertices.select("id") if vertices is not None
+            else e.select(F.col("dst").alias("id")).distinct()
+        )
+        e = self_row_layout(e, own)
     e.persist()
     try:
         if vertices is not None:
@@ -107,18 +117,16 @@ def cc_minlabel(
         for it in range(start, max_iter):
             if grid is not None:
                 mn = spmv_grid(e, labels, grid, SELECT2ND_MIN)
+                mnr = mn.select(F.col("id"), F.col("val").alias("_mn"))
+                step = labels.join(mnr, on="id", how="left").select(
+                    "id",
+                    F.when(F.col("_mn") < F.col("val"), F.col("_mn"))
+                    .otherwise(F.col("val"))
+                    .alias("val"),
+                    (F.col("_mn") < F.col("val")).cast("long").alias("_moved"),
+                )
             else:
-                mn = spmv(e, labels, SELECT2ND_MIN, broadcast_x=bb)
-            mnr = mn.select(F.col("id"), F.col("val").alias("_mn"))
-            if bb:
-                mnr = F.broadcast(mnr)
-            step = labels.join(mnr, on="id", how="left").select(
-                "id",
-                F.when(F.col("_mn") < F.col("val"), F.col("_mn"))
-                .otherwise(F.col("val"))
-                .alias("val"),
-                (F.col("_mn") < F.col("val")).cast("long").alias("_moved"),
-            )
+                step = _minlabel_step(e, labels, bb)
             changed = None
             if (it + 1) % check_every == 0 or it + 1 == max_iter:
                 new_labels, row = runner.truncate_agg(
@@ -134,6 +142,24 @@ def cc_minlabel(
         return labels
     finally:
         e.unpersist()
+
+
+def _minlabel_step(e: DataFrame, labels: DataFrame, bb: bool) -> DataFrame:
+    """One min-label superstep over the self-row layout: ``val`` = the min
+    label over v's neighbors and v itself, ``_moved`` = 1 where it fell
+    below v's own label (read off the self row). A destination with no
+    self row lies outside the vertex set and is dropped."""
+    x = labels.select(F.col("id").alias("_id"), F.col("val").alias("_x"))
+    if bb:
+        x = F.broadcast(x)
+    loop = e["src"] == e["dst"]
+    return (
+        e.join(x, e["src"] == x["_id"])
+        .groupBy(e["dst"].alias("id"))
+        .agg(F.min(x["_x"]).alias("val"), F.min(F.when(loop, x["_x"])).alias("_old"))
+        .filter(F.col("_old").isNotNull())
+        .select("id", "val", (F.col("val") < F.col("_old")).cast("long").alias("_moved"))
+    )
 
 
 def cc_fastsv(
@@ -346,30 +372,22 @@ def cc_trace(
     this superstep, n_labels = distinct labels remaining — a monotone upper
     bound on components).
 
-    Same plan per superstep as cc_minlabel (one SpMV<Select2ndMin> plus
-    the least-fold left join with the ``moved`` flag computed inline,
-    lineage cut per superstep); each iteration contributes one lazy
+    Same plan per superstep as cc_minlabel (one SpMV<Select2ndMin> over
+    the A + I self-row layout, whose aggregate also yields the ``moved``
+    flag, lineage cut per superstep); each iteration contributes one lazy
     1-row aggregate over its OWN checkpoint — no old-vs-new join and NO
     driver action inside the loop.
     """
     runner = runner or SuperstepRunner(spark)
-    e = partition_by_key(edges.select("src", "dst"), "dst")
+    e = edges.select("src", "dst")
+    e = self_row_layout(e, e.select(F.col("dst").alias("id")).distinct())
     e.persist()
     try:
         verts = e.select(F.col("dst").alias("id")).distinct()
         labels = runner.truncate(verts.select("id", F.col("id").alias("val")))
         rows = []
         for it in range(1, num_iters + 1):
-            mn = spmv(e, labels, SELECT2ND_MIN, broadcast_x=True)
-            mnr = F.broadcast(mn.select(F.col("id"), F.col("val").alias("_mn")))
-            step = labels.join(mnr, on="id", how="left").select(
-                "id",
-                F.when(F.col("_mn") < F.col("val"), F.col("_mn"))
-                .otherwise(F.col("val"))
-                .alias("val"),
-                (F.col("_mn") < F.col("val")).cast("long").alias("_moved"),
-            )
-            new_labels = runner.truncate(step)
+            new_labels = runner.truncate(_minlabel_step(e, labels, True))
             rows.append(
                 new_labels.agg(
                     F.lit(it).cast("long").alias("iter"),

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from combblas_spark.core.semiring import PLUS_TIMES
-from combblas_spark.core.tuning import BROADCAST_MAX_ROWS, partition_by_key
+from combblas_spark.core.tuning import BROADCAST_MAX_ROWS, self_row_layout
 from combblas_spark.operators.multiply import spgemm
 from combblas_spark.operators.reduce import reduce_dim
 from combblas_spark.operators.transform import (
@@ -73,7 +73,12 @@ def label_propagation(
         grid = Grid2D(spark, *shape)
         edges = grid.partition_edges(edges.select("src", "dst", "w"))
     else:
-        edges = partition_by_key(edges.select("src", "dst", "w"), "dst")
+        # one self row (v, v, w = null) per vertex: its group (v, x[v])
+        # carries a null score, which ranks below every real one, so a
+        # vertex with no scored in-edge keeps its label in the same
+        # aggregate (no join of the pick back onto the old labels)
+        e = edges.select("src", "dst", "w")
+        edges = self_row_layout(e, e.select(F.col("dst").alias("id")).distinct())
     edges.persist()
     try:
         # symmetric-input contract: dst alone covers every vertex; in
@@ -107,9 +112,10 @@ def label_propagation(
                     .agg(F.sum("w").alias("score"))
                 )
             # same total order as the former row_number window (score desc,
-            # label asc) via one more hash aggregate — in broadcast mode
-            # both aggs cluster on dst over the cached layout, so the whole
-            # pick is Exchange-free (no shuffle+sort window)
+            # label asc; a null score lowest) via one more hash aggregate —
+            # in broadcast mode both aggs cluster on dst over the cached
+            # layout, so the whole pick is Exchange-free (no shuffle+sort
+            # window)
             picked = (
                 scores.groupBy("id")
                 .agg(
@@ -122,16 +128,17 @@ def label_propagation(
                 )
                 .select("id", (-F.col("m.nl")).alias("val"))
             )
-            # isolated / no-incoming vertices keep their label
-            if bb:
-                picked = F.broadcast(picked)
+            if grid is not None:
+                # the grid layout has no self rows: isolated /
+                # no-incoming vertices keep their label through a join
+                picked = (
+                    labels.alias("o")
+                    .join(picked.alias("p"), on="id", how="left")
+                    .select("id", F.coalesce(F.col("p.val"), F.col("o.val")).alias("val"))
+                )
             # no in-loop action: lazy lineage cuts chain the fixed
             # iteration count into the single materializing job below
-            labels = runner.truncate_lazy(
-                labels.alias("o")
-                .join(picked.alias("p"), on="id", how="left")
-                .select("id", F.coalesce(F.col("p.val"), F.col("o.val")).alias("val"))
-            )
+            labels = runner.truncate_lazy(picked)
             runner.save(it + 1, {"labels": labels}, {})
         labels.count()  # materialize while the edge layout is still cached
         return labels

@@ -10,16 +10,23 @@ Operations.h:102 safemultinv). This module is that pipeline, DataFrame-first:
     x_{k+1}[v] = (1-a)/n + a * (sum_{(u,v)} w*x_k[u] + dangling_k/n)
 
 Scale notes:
-* E_norm is computed ONCE and cached; every iteration is a single
-  shuffle (join on src + agg on dst). The ranks vector is tiny relative
-  to edges — AQE broadcast-joins it under the threshold.
+* E_norm is computed ONCE, laid out by dst and cached, with one self row
+  (v, v, w = null) per vertex (A + I, AddLoops SpParMat.cpp:3290). A
+  superstep is one broadcast of the ranks vector and one Exchange-free
+  aggregate over that layout, which yields every vertex's new rank AND
+  its old one (off its self row): no contribution vector is broadcast
+  back and joined onto the old ranks. Grid mode keeps its own layout.
 * set-up is ONE table, deg(id, deg) = the weighted out-degree over every
   vertex, null for a dangling one (no out-edge), cut once with the
   vertex and dangling counts folded into its checkpoint job; the vertex
-  set, the dangling set, the initial ranks and E_norm's divisor are all
-  projections of it.
-* dangling mass needs a per-iteration scalar, summed over the dangling
-  projection of that cut (skipped entirely when there is none).
+  set, the dangling set, the self rows, the initial ranks and E_norm's
+  divisor are all projections of it.
+* dangling mass is a per-superstep scalar. The self rows carry each
+  vertex's dangling mark, so every superstep's cut observes the mass of
+  the vector it writes, sum(val where dangling), and the next superstep
+  folds it into its reset literal; only the starting vector's mass is
+  summed on its own, once. Fixed-iteration mode therefore cuts eagerly
+  when there is a dangling vertex, and lazily otherwise.
 * lineage is truncated per iteration (localCheckpoint) — without it the
   plan tree grows linearly and analysis time dominates by iteration ~30.
 """
@@ -32,8 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from combblas_spark.core.semiring import PLUS_TIMES
-from combblas_spark.core.tuning import BROADCAST_MAX_ROWS, partition_by_key
-from combblas_spark.operators.multiply import spmv
+from combblas_spark.core.tuning import BROADCAST_MAX_ROWS, self_row_layout
 from combblas_spark.operators.reduce import reduce_dim
 from combblas_spark.operators.transform import dimapply
 from combblas_spark.plans.grid import Grid2D, auto_grid_shape, spmv_grid
@@ -141,7 +147,12 @@ def pagerank(
     if grid is not None:
         e_norm = grid.partition_edges(e_norm).persist()
     else:
-        e_norm = partition_by_key(e_norm, "dst").persist()
+        # one self row per vertex, carrying its dangling mark: the
+        # superstep aggregate then yields every vertex's new rank, its old
+        # rank and its mark, with no join back onto the old vector
+        e_norm = self_row_layout(
+            e_norm, deg.select("id", F.col("deg").isNull().alias("dng"))
+        ).persist()
     e_norm.count()
     try:
         return _pagerank_iters(
@@ -185,20 +196,17 @@ def _pagerank_iters(
         start_iter, states, _ = resumed
         ranks = states["ranks"]
 
+    def dangling_mass(r):
+        return dangling.join(r, on="id").agg(F.sum("val")).collect()[0][0] or 0.0
+
+    # the dangling mass of the starting vector; past it, each superstep's
+    # cut observes the mass of the vector it writes (grid mode, whose
+    # layout has no self rows, sums it afresh every superstep)
+    dang_mass = dangling_mass(ranks) if n_dangling else 0.0
     iters = num_iters if num_iters is not None else max_iter
     for it in range(start_iter, iters):
-        dang_mass = 0.0
-        if n_dangling:  # symmetric graphs have none -> no per-iteration action
-            dang_mass = (
-                dangling.join(ranks, on="id", how="inner").agg(F.sum("val")).collect()[0][0]
-                or 0.0
-            )
-        if grid is not None:
-            contrib = spmv_grid(e_norm, ranks, grid, PLUS_TIMES)
-        else:
-            contrib = spmv(e_norm, ranks, PLUS_TIMES, broadcast_x=bb)
-            if bb:
-                contrib = F.broadcast(contrib)
+        if grid is not None and n_dangling and it > start_iter:
+            dang_mass = dangling_mass(ranks)
         # restart + dangling mass both redistribute along p. The uniform
         # case keeps the EXACT scalar expression (1-a)/n + a*dang/n — same
         # IEEE op order as the SQL oracle — rather than (1-a+a*dang)*(1/n),
@@ -207,34 +215,39 @@ def _pagerank_iters(
             reset = F.lit(1.0 - alpha + alpha * dang_mass) * p_col
         else:
             reset = F.lit((1.0 - alpha) / n + alpha * dang_mass / n)
-        # ranks is dense over verts, so it can be the left side itself —
-        # carrying the OLD value through lets the convergence check fold
-        # into the materializing action (no old-vs-new re-join)
-        new_ranks = (
-            ranks.select("id", F.col("val").alias("_old"))
-            .join(contrib, on="id", how="left")
-            .select(
-                "id",
-                (reset + F.lit(alpha) * F.coalesce(F.col("val"), F.lit(0.0))).alias(
-                    "val"
-                ),
-                F.col("_old"),
+        if grid is not None:
+            contrib = spmv_grid(e_norm, ranks, grid, PLUS_TIMES)
+            step = ranks.select("id", F.col("val").alias("_old")).join(
+                contrib.select("id", F.col("val").alias("_s")), on="id", how="left"
             )
-        )
+        else:
+            step = _superstep(e_norm, ranks, bb)
+        new_ranks = step.withColumn(
+            "val", reset + F.lit(alpha) * F.coalesce(F.col("_s"), F.lit(0.0))
+        ).drop("_s")
+        # every scalar the loop reads next rides the superstep's own
+        # checkpoint job: max |delta| on a check step, and the dangling
+        # mass whenever there is one
+        check = num_iters is None and ((it + 1) % check_every == 0 or it + 1 == iters)
+        aggs = []
+        if check:
+            aggs.append(F.max(F.abs(F.col("val") - F.col("_old"))).alias("d"))
+        if n_dangling and grid is None:
+            aggs.append(F.sum(F.when(F.col("dng"), F.col("val"))).alias("dang"))
+        if aggs:
+            new_ranks, row = runner.truncate_agg(new_ranks, *aggs)
+            if n_dangling and grid is None:
+                dang_mass = row["dang"] or 0.0
+        elif num_iters is None:
+            new_ranks = runner.truncate(new_ranks)
+        else:
+            # fixed-iteration mode with nothing to observe: no in-loop
+            # action — lazy lineage cuts chain every superstep into the
+            # single materializing job below
+            new_ranks = runner.truncate_lazy(new_ranks)
+        ranks = new_ranks.select("id", "val")
         if num_iters is None:
-            delta = None
-            if (it + 1) % check_every == 0 or it + 1 == iters:
-                new_ranks, row = runner.truncate_agg(
-                    new_ranks.select(
-                        "id", "val",
-                        F.abs(F.col("val") - F.col("_old")).alias("_d"),
-                    ),
-                    F.max("_d").alias("d"),
-                )
-                delta = row["d"]
-            else:
-                new_ranks = runner.truncate(new_ranks)
-            ranks = new_ranks.select("id", "val")
+            delta = row["d"] if check else None
             runner.save(
                 it + 1,
                 {"ranks": ranks},
@@ -243,14 +256,34 @@ def _pagerank_iters(
             if delta is not None and delta < tol:
                 break
         else:
-            # fixed-iteration (oracle-parity / bench) mode: no in-loop
-            # action — lazy lineage cuts chain every superstep into the
-            # single materializing job below
-            ranks = runner.truncate_lazy(new_ranks.select("id", "val"))
             runner.save(it + 1, {"ranks": ranks}, {"n": n})
     if num_iters is not None:
         ranks.count()  # materialize while e_norm is still cached
     return ranks
+
+
+def _superstep(e_norm: DataFrame, ranks: DataFrame, bb: bool) -> DataFrame:
+    """One SpMV over the self-row layout: per vertex, ``_s`` = sum of
+    w * x over its in-edges (null when it has none; self rows carry a null
+    w and add nothing), ``_old`` = its own rank read off its self row and
+    ``dng`` = its dangling mark. A destination with no self row lies
+    outside the vertex set (``vertices=`` omitted it) and is dropped. With
+    the vector broadcast this is one Exchange-free aggregate over the
+    cached layout."""
+    x = ranks.select(F.col("id").alias("_id"), F.col("val").alias("_x"))
+    if bb:
+        x = F.broadcast(x)
+    loop = e_norm["src"] == e_norm["dst"]
+    return (
+        e_norm.join(x, e_norm["src"] == x["_id"])
+        .groupBy(e_norm["dst"].alias("id"))
+        .agg(
+            F.sum(e_norm["w"] * x["_x"]).alias("_s"),
+            F.max(F.when(loop, x["_x"])).alias("_old"),
+            F.max(e_norm["dng"]).alias("dng"),
+        )
+        .filter(F.col("_old").isNotNull())
+    )
 
 
 def spam_mass(

@@ -12,6 +12,7 @@ this limit (or the kernel runs in ``mode='grid'`` and broadcasts nothing).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+import pyspark.sql.functions as F
 
 #: 4M rows of (long, double) ~ 64 MB serialized — comfortably under
 #: executor/driver headroom at 1000 executors, far under it locally.
@@ -41,3 +42,21 @@ def partition_by_key(df: DataFrame, *keys: str) -> DataFrame:
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
     )
     return df.repartition(*keys)
+
+
+def self_row_layout(edges: DataFrame, ids: DataFrame) -> DataFrame:
+    """``partition_by_key(edges ∪ loops, "dst")`` with one self row
+    ``(v, v)`` per row of ``ids`` — the A + I layout (CombBLAS AddLoops,
+    SpParMat.cpp:3290) that lets a superstep aggregate read each vertex's
+    OLD value next to its new one, so the new vector needs no join back
+    onto the old. Columns of ``ids`` other than ``id`` ride on the self
+    rows; a column one side lacks is null there, so a self row's ``w`` is
+    null and adds nothing to a sum."""
+    loops = ids.select(
+        F.col("id").alias("src"),
+        F.col("id").alias("dst"),
+        *[c for c in ids.columns if c != "id"],
+    )
+    return partition_by_key(
+        edges.unionByName(loops, allowMissingColumns=True), "dst"
+    )

@@ -103,6 +103,66 @@ def test_spmv_broadcasts_the_vector(spark):
     assert plan.count("HashAggregate") >= 2
 
 
+def _adaptive_nodes(df) -> list:
+    """Operator names of ``df``'s executed (adaptive) plan, entering each
+    query stage and stopping at a cached relation's scan — a cached
+    layout's own build plan is not part of the query."""
+    names = []
+
+    def walk(p):
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(p.executedPlan())
+        names.append(name)
+        if name == "InMemoryTableScan":
+            return
+        if name.endswith("QueryStage"):
+            return walk(p.plan())
+        kids = p.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return names
+
+
+@pytest.mark.parametrize("kernel", ["pagerank", "cc_minlabel", "label_propagation"])
+def test_superstep_is_one_broadcast_and_no_exchange(spark, kernel):
+    """In broadcast mode a PageRank, CC or LP superstep over its cached
+    self-row layout broadcasts exactly one thing, the vector, and shuffles
+    nothing: the new vector, the old one and the pick all come out of one
+    aggregate on the layout's dst clustering."""
+    from combblas_spark.algorithms import cc_minlabel, label_propagation, pagerank
+    from combblas_spark.operators.transform import symmetrize
+    from combblas_spark.plans.superstep import SuperstepRunner
+    from combblas_spark.sources.fixtures import weighted_digraph
+
+    class Recorder(SuperstepRunner):
+        frames: list = []
+
+        def _cut(self, df, eager):
+            self.frames.append(df)
+            return super()._cut(df, eager)
+
+    run = {
+        "pagerank": lambda r: pagerank(spark, g, num_iters=2, runner=r),
+        "cc_minlabel": lambda r: cc_minlabel(spark, g, runner=r),
+        "label_propagation": lambda r: label_propagation(spark, g, num_iters=2, runner=r),
+    }[kernel]
+    g = symmetrize(weighted_digraph(spark, n=64, avg_deg=4, seed=3)).persist()
+    g.count()
+    try:
+        r = Recorder(spark)
+        r.frames = []
+        run(r).count()
+        nodes = _adaptive_nodes(r.frames[-1])  # the last superstep's cut
+    finally:
+        g.unpersist()
+    assert "InMemoryTableScan" in nodes, nodes
+    assert nodes.count("BroadcastExchange") == 1, nodes
+    assert "Exchange" not in nodes, nodes
+
+
 def test_bucketed_join_is_exchange_free(spark, tmp_path):
     """Two tables bucketed+sorted on the join key: the equi-join plan must
     contain NO Exchange and NO Sort on either side — the co-located join
